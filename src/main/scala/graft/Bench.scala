@@ -119,7 +119,14 @@ object Bench {
         val tt0 = taskMillis.get()
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
+          catch {
+            case scala.util.control.NonFatal(e) =>
+              val msg = Option(e.getMessage)
+                .flatMap(_.linesIterator.nextOption()).getOrElse("")
+              System.err.println(
+                s"[bench] FAIL $name: ${e.getClass.getName}: $msg")
+              false
+          }
         // A throwing pass must NOT contribute its (fast-fail) elapsed time —
         // min over passes would otherwise report a crash as a speedup. NaN
         // marks the pass; min/mean below skip NaNs and emit -1 only when a

@@ -84,17 +84,13 @@ object Graft {
   private val configuredMarker = "graft.session.configured"
 
   /** Drop every session-lifetime memo of deterministic sub-results (pair
-    * mine, KMeans/PQ fits, bigram LM). Bench calls this between passes so
-    * each pass's per-query times include one honest mine/fit per corpus —
-    * without it, pass 2 is memo-warm for every memoized query and the
-    * min-over-passes accounting excludes the mine entirely (round-16
-    * verdict #3). Harness-only; no query path calls this. */
-  def clearSessionMemos(): Unit = {
-    graft.queries.DedupQueries.clearMemo()
-    graft.queries.TextModels.clearMemo()
-    graft.ml.KMeans.clearMemo()
-    graft.ml.ProductQuantizer.clearMemo()
-  }
+    * mine, KMeans/PQ fits, bigram LM — see [[SessionMemo]]). Bench calls
+    * this between passes so each pass's per-query times include one honest
+    * mine/fit per corpus — without it, pass 2 is memo-warm for every
+    * memoized query and the min-over-passes accounting excludes the mine
+    * entirely (round-16 verdict #3). Harness-only; no query path calls
+    * this. */
+  def clearSessionMemos(): Unit = SessionMemo.clear()
 
   /** Per-query-entry [[configure]]: Tables.load calls this, so a session
     * the DRIVER built itself — non-UTC timezone, MIME-chunked base64 —

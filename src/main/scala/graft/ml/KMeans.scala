@@ -86,29 +86,11 @@ object KMeans {
       .select(col(idCol), col("cid"))
   }
 
-  /** Session-lifetime model cache, keyed on the CANONICALIZED logical plan
-    * of the input frame plus every fit parameter (the Tables.registerAll
-    * memoization pattern, applied to model state): q84 and q158 coarse-fit
-    * the SAME 16-list IVF over the same embeddings table, and Bench runs
-    * every query twice — without this, one bench pass re-runs the identical
-    * deterministic Lloyd loop four times. The model is k×dim floats (≤ a
-    * few KB), so entries are negligible; fit is deterministic given its
-    * input, so the cache is semantics-preserving. Frames whose lineage is
-    * run-unique (e.g. localCheckpoint LogicalRDDs) simply never hit. */
-  private val fitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Array[Float]]]()
-
-  /** Drop the session fit memo — see Graft.clearSessionMemos. */
-  private[graft] def clearMemo(): Unit = fitCache.clear()
-
-  private[ml] def canonicalKey(df: DataFrame): String =
-    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-      .queryExecution.logical.canonicalized.toString
-
   /** Lloyd iterations; returns the k centroids. Empty clusters keep their
-    * previous centroid. Results are memoized per (input plan, params) —
-    * see [[fitCache]]; custom score functions bypass the cache (their
-    * identity can't be keyed). */
+    * previous centroid. Results are memoized per (input, params) through
+    * [[graft.SessionMemo]] (q84 and q158 fit the same 16-list IVF over the
+    * same table, and every harness runs each query more than once); custom
+    * score functions bypass the memo (their identity can't be keyed). */
   def fit(vecs: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int, score: Score = cosine): Seq[Array[Float]] = {
     val scoreTag =
@@ -116,11 +98,8 @@ object KMeans {
       else if (score eq negSquaredL2) "l2"
       else null
     if (scoreTag == null) fitUncached(vecs, idCol, vecCol, k, iters, score)
-    else {
-      val key = s"$scoreTag|$idCol|$vecCol|$k|$iters|" + canonicalKey(vecs)
-      fitCache.computeIfAbsent(key,
-        _ => fitUncached(vecs, idCol, vecCol, k, iters, score))
-    }
+    else graft.SessionMemo("KMeans.fit", vecs, scoreTag, idCol, vecCol, k, iters)(
+      fitUncached(vecs, idCol, vecCol, k, iters, score))
   }
 
   private def fitUncached(vecs: DataFrame, idCol: String, vecCol: String,

@@ -50,22 +50,12 @@ object ProductQuantizer {
     * overhead for the same arithmetic; measured 7 s → ~2 s at sf0.1).
     * Per-subspace semantics match [[KMeans.fit]]: seed = the k
     * lowest-(xxhash64, id) sub-vectors, assignment ties to the lowest
-    * code, empty codes keep their previous centroid. */
+    * code, empty codes keep their previous centroid. Memoized per (input,
+    * params) through [[graft.SessionMemo]]. */
   def fit(vecs: DataFrame, idCol: String, vecCol: String, dim: Int,
-      m: Int = 4, k: Int = 16, iters: Int = 3): Model = {
-    // memoized like KMeans.fit (q117 re-fits the same raw-embedding
-    // codebooks on every bench pass); run-unique lineages (q158's
-    // checkpointed residual frame) never hit and just fit normally
-    val key = s"$idCol|$vecCol|$dim|$m|$k|$iters|" + KMeans.canonicalKey(vecs)
-    fitCache.computeIfAbsent(key,
-      _ => fitUncached(vecs, idCol, vecCol, dim, m, k, iters))
-  }
-
-  private val fitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Model]()
-
-  /** Drop the session fit memo — see Graft.clearSessionMemos. */
-  private[graft] def clearMemo(): Unit = fitCache.clear()
+      m: Int = 4, k: Int = 16, iters: Int = 3): Model =
+    graft.SessionMemo("ProductQuantizer.fit", vecs, idCol, vecCol, dim, m, k, iters)(
+      fitUncached(vecs, idCol, vecCol, dim, m, k, iters))
 
   private def fitUncached(vecs: DataFrame, idCol: String, vecCol: String,
       dim: Int, m: Int, k: Int, iters: Int): Model = {

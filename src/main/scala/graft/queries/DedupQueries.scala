@@ -1,6 +1,8 @@
 package graft.queries
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.dedup.Dedup
 import graft.functions.VectorOps
 
@@ -15,8 +17,8 @@ object DedupQueries {
     * (doc_id, lang, n_chars, text) frame: an EXACT prefix-filter candidate
     * join (PPJoin/AllPairs family), then the native merge-pass verify on
     * sorted gram-hash arrays. Returns (id_a, id_b) with Jaccard >= `thr`.
-    * Results are memoized per (corpus plan, thr) for the session — see
-    * [[pairCache]].
+    * Results are memoized per (corpus, thr) for the session — see
+    * [[graft.SessionMemo]].
     *
     * Candidate generation (round-14, the graph fleet's scale fix): the
     * old candidate join blocked on (lang, 16-char length bucket) ONLY —
@@ -45,105 +47,47 @@ object DedupQueries {
     // the same optimized plan — the optimizer collapses the Project chain.
     val corpus = docs.select(col("doc_id"), col("lang"), col("n_chars"),
       col("text"))
-    val plan = corpus.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-      .queryExecution.optimizedPlan
-    // Memoize ONLY file-backed corpora: a parquet leaf's location pins the
-    // data identity, while LocalRelation/LogicalRDD leaves (spec fixtures,
-    // probe corpora, checkpointed frames) print no data in toString — two
-    // same-schema constructed corpora would collide on the key. Those
-    // bypass the memo and compute per-call exactly as before.
-    val leaves = plan.collectLeaves()
-    val fileBacked = leaves.nonEmpty && leaves.forall {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation.isInstanceOf[
-          org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-      case _ => false
-    }
-    if (!fileBacked) ngramPairsWithCandidates(corpus, thr)._2
-    else {
-      // The key folds a per-file (path|length|mtime) stamp over every leaf
-      // file (the cachedFixture/MediaStreamFixture discipline): a corpus
-      // path that is REWRITTEN within the same JVM (ScaleProbe-style
-      // regenerate-then-mine, in-session fixture rebuilds) must miss the
-      // cache instead of silently returning the pre-rewrite pairs
-      // (round-16 ADVICE #2).
-      val roots = leaves.collect {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          val rel = lr.relation.asInstanceOf[
-            org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-          val stamp = rel.location.listFiles(Nil, Nil).flatMap(_.files)
-            .map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}")
-            .sorted.mkString("\n").hashCode
-          rel.location.rootPaths.mkString(",") + "#" + stamp
-      }.mkString(";")
-      val canon = plan.canonicalized
-      val key = s"$thr|$roots|${canon.hashCode}|$canon"
-      val hit = pairCache.get(key)
-      if (hit != null && hit._2 == null) {
-        // known over-bound corpus: straight to the distributed path — no
-        // head-probe re-run (round-16 verdict #1: the probe executed the
-        // whole mine once per call just to re-discover the overflow)
-        ngramPairsWithCandidates(corpus, thr)._2
-      } else if (hit != null) {
-        spark.createDataFrame(java.util.Arrays.asList(hit._2: _*), hit._1)
-      } else {
-        val pairs = ngramPairsWithCandidates(corpus, thr)._2
-        val taken = pairs.head(PairMemoMaxRows + 1)
-        if (taken.length > PairMemoMaxRows) {
-          // past driver-state scale: memoize the OVERFLOW itself so every
-          // later call skips the probe and stays distributed, and return
-          // the SAME frame (its prep is already checkpointed — the
-          // consumer's action re-runs only candidates+verify, not a
-          // second full mine)
-          pairCache.put(key, (null, null))
-          pairs
-        } else {
-          // entry-count bound (round-16 ADVICE #3): a long-lived session
-          // touching many corpora/thresholds must not accumulate
-          // unbounded driver rows — past the cap, serve without memoizing
-          if (pairCache.size < PairMemoMaxEntries)
-            pairCache.put(key, (pairs.schema, taken))
-          spark.createDataFrame(
-            java.util.Arrays.asList(taken: _*), pairs.schema)
-        }
+    // Only file-backed corpora are memoized (see graft.SessionMemo): a
+    // constructed or checkpointed corpus computes per call. An entry holds
+    // the mined rows, or (null, null) for a corpus that mines more than
+    // PairMemoMaxRows pairs.
+    def mine() = ngramPairsWithCandidates(corpus, thr)._2
+    graft.SessionMemo.key("DedupQueries.ngramPairs", corpus, thr) match {
+      case None => mine()
+      case Some(key) => graft.SessionMemo.get[(StructType, Array[Row])](key) match {
+        case Some((_, null)) =>
+          // known over-bound corpus: straight to the distributed path — no
+          // head-probe re-run (round-16 verdict #1: the probe executed the
+          // whole mine once per call just to re-discover the overflow)
+          mine()
+        case Some((schema, rows)) =>
+          spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+        case None =>
+          val pairs = mine()
+          val taken = pairs.head(PairMemoMaxRows + 1)
+          if (taken.length > PairMemoMaxRows) {
+            // past driver-state scale: memoize the OVERFLOW itself so every
+            // later call skips the probe and stays distributed, and return
+            // the SAME frame (its prep is already checkpointed — the
+            // consumer's action re-runs only candidates+verify, not a
+            // second full mine)
+            graft.SessionMemo.put(key, (null, null))
+            pairs
+          } else {
+            graft.SessionMemo.put(key, (pairs.schema, taken))
+            spark.createDataFrame(
+              java.util.Arrays.asList(taken: _*), pairs.schema)
+          }
       }
     }
   }
-
-  /** Drop every session memo (pair mine). Bench calls this between passes
-    * so per-query MIN includes one honest mine per corpus per pass
-    * (round-16 verdict #3: memo-warm pass 2 excluded the mine from the
-    * recorded numbers). Not part of any query path. */
-  private[graft] def clearMemo(): Unit = pairCache.clear()
 
   /** Count of [[minerPrep]] invocations — PairMemoSpec's probe for the
     * overflow path (one mine per call path, never two). Test-only. */
   private[graft] val minerPrepCalls =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Session-lifetime memo of the MINED PAIR SET per (corpus file roots,
-    * optimized canonical plan, threshold) — ml/KMeans.scala's fitCache
-    * discipline applied to the pair miner (round-15 verdict #1): thirteen
-    * registered queries mine one of three corpora (documents; doubled
-    * src0; tripled src0) and Bench runs every query twice, so without
-    * this the identical deterministic mine — gram-extraction
-    * localCheckpoint, per-(gram,lang) df table, cost-model driver jobs,
-    * candidate join, merge-pass verify — re-runs up to 10× per corpus
-    * per run (BENCH_r15: the cohort sat 1.45-1.7× over BENCH_r14 against
-    * a 1.06× ambient median). The memo holds DRIVER rows, NOT a persisted
-    * frame: Bench and Verify unpersist every persistent RDD between
-    * queries (leftover-block hygiene), which would sever a memoized
-    * localCheckpoint's truncated lineage. Entries are bounded by
-    * [[PairMemoMaxRows]]; a corpus that mines more pairs than that skips
-    * the memo and stays fully distributed (the 100 TB posture). This is
-    * same-JVM common-subexpression elimination: every Bench/Verify
-    * invocation is a fresh JVM that recomputes the mine from the parquet
-    * inputs — nothing persists across runs. */
-  private val pairCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.sql.types.StructType,
-      Array[org.apache.spark.sql.Row])]()
-
-  /** Driver-state bound for [[pairCache]] entries. 100k boxed
+  /** Driver-row bound of one pair-memo entry. 100k boxed
     * (id_a, id_b, jac) GenericRows ≈ 15-30 MB — round-16 ADVICE #3: the
     * old 1M bound was ~10× the "low tens of MB" its comment claimed. The
     * gate corpora mine well under 10⁴ pairs (sf0.1: ~10²), so 100k keeps
@@ -153,13 +97,6 @@ object DedupQueries {
     * overflow path on a small corpus; never reassigned in main code. */
   private[graft] var PairMemoMaxRows = 100000
 
-  /** Entry-count bound for [[pairCache]] — caps total retained driver
-    * rows at PairMemoMaxEntries × PairMemoMaxRows worst-case. */
-  private val PairMemoMaxEntries = 64
-
-  /** [[ngramPairs]] additionally exposing the pre-verify candidate frame —
-    * EdgeProbe's attribution hook (candidate growth vs pair growth is the
-    * difference between a mine problem and a corpus problem). */
   /** The miner's shared prep: gram frame, exploded-prefix frame, df
     * table, exact rational threshold, and the two strategy cost
     * estimates. Factored out so DedupSkewSpec can pin the PICK itself on
@@ -543,7 +480,7 @@ object DedupQueries {
     // near-dup pairs (q43's machinery — DuckDB recomputes them), plus a
     // flag pinning that MinHash banding (16 hashes, 4 bands × 4 rows over
     // word 3-shingles) band-collides on ≥ 0.6 of those true pairs —
-    // measured 0.82 (sf0.1) / 1.0 (sf0.01) by graft.tools.RecallProbe;
+    // measured 0.82 (sf0.1) / 1.0 (sf0.01) on the real tables;
     // banding theory at j≈0.7-in-shingle-space gives P ≈ 1-(1-j⁴)⁴ ≈ 0.78.
     // The audit joins sketches onto the SMALL exact-pair set — no LSH
     // self-join needed, so the audit itself adds no quadratic work. A

@@ -486,11 +486,11 @@ object GraphQueries {
     //
     // MEASURED CEILING (q122 discipline, round-14 verdict #5): on the
     // degenerate real10 corpus the doc-count exponent is 1.09 (was 1.17
-    // before the frontier bound) — and EdgeProbe attributes ALL of the
-    // residual to corpus densification, not the operator: 10× docs grow
-    // the mined graph's true pairs 137× (2 → 274 on src0; candidates
-    // 32,341 → 3,280,273), while q330's wall time grew only 12.2×
-    // (6.73 s → 82.38 s) — exponent 0.51 in EDGE count, strongly
+    // before the frontier bound) — and measured edge growth attributes
+    // ALL of the residual to corpus densification, not the operator: 10×
+    // docs grow the mined graph's true pairs 137× (2 → 274 on src0;
+    // candidates 32,341 → 3,280,273), while q330's wall time grew only
+    // 12.2× (6.73 s → 82.38 s) — exponent 0.51 in EDGE count, strongly
     // sub-linear in the input the power iteration actually consumes. On
     // the organic zipf10 corpus (Heaps-law vocabulary, the production
     // shape) the doc exponent is 0.84.

@@ -209,12 +209,12 @@ object SimilarityQueries {
     * `recallBound` of them overall. A recall regression flips the flag and
     * fails the driver's hash gate while the index stays free to be
     * approximate. Bounds are set from measured recall on the real tables
-    * (graft.tools.RecallProbe: deterministic seeds, so the values are
-    * run-stable at a given sf): q51 sign-LSH 0.27–0.43, q84 k-means-IVF
-    * 0.50–0.60, q117 PQ 0.10–0.17 — low in absolute terms because the
-    * synthetic embeddings are uniform random (no cluster structure for a
-    * data-adaptive index to exploit; SimilaritySpec pins high recall on a
-    * clustered corpus instead).
+    * (deterministic seeds, so the values are run-stable at a given sf):
+    * q51 sign-LSH 0.27–0.43, q84 k-means-IVF 0.50–0.60, q117 PQ
+    * 0.10–0.17 — low in absolute terms because the synthetic embeddings
+    * are uniform random (no cluster structure for a data-adaptive index
+    * to exploit; SimilaritySpec pins high recall on a clustered corpus
+    * instead).
     *
     * The exact frame is 3×k rows after one corpus pass — localCheckpoint
     * so the output join and the recall join don't each rescan the corpus.
@@ -417,7 +417,7 @@ object SimilarityQueries {
     // RESIDUALS against each vector's list centroid, scored per (query,
     // probed list) via that list's own ADC table (see ivfPqParts). Bound
     // oracle: exact top-k rows + two flags, bounds set from
-    // graft.tools.IvfPqProbe on the real tables. recall_ok is STRUCTURAL
+    // measurements on the real tables. recall_ok is STRUCTURAL
     // rather than a final-top-k recall floor: it pins probed-candidate
     // COVERAGE ≥ 0.10 — the fraction of exact top-k pairs whose list was
     // probed, expected ≈ nProbe/nLists = 0.25 on unclustered data
@@ -775,8 +775,8 @@ object SimilarityQueries {
     // Inverted multi-index ANN (see [[imiTopK]]): 2×8 half-space codebooks
     // → 64 product cells, queries probe 3 centroids per half (9 cells,
     // ~14 % of a uniform corpus). Bound oracle (the q51/q84 harness):
-    // exact top-k rows + overall recall flag. Measured on the real tables
-    // (RecallProbe): 0.33 at sf0.01 / 0.37 at sf0.1 — above the ~14 %
+    // exact top-k rows + overall recall flag. Measured on the real tables:
+    // 0.33 at sf0.01 / 0.37 at sf0.1 — above the ~14 %
     // probed fraction because cells whose BOTH halves are near the
     // query's concentrate high-cosine vectors even on this unclustered
     // corpus. Bound 0.1 sits ≥7 discrete hits below the worst measurement
@@ -1112,7 +1112,7 @@ object SimilarityQueries {
 
   /** Inverted multi-index (Babenko & Lempitsky 2012) approximate top-k:
     * the vector splits into two halves, each half gets its OWN small
-    * codebook (k-means over sub-vectors, shared fitCache), and a cell is
+    * codebook (k-means over sub-vectors, memoized KMeans.fit), and a cell is
     * the PAIR of half-assignments — kPerHalf² cells from 2·kPerHalf
     * centroids. That product structure is the trillion-vector trick: 2×8
     * centroids index as finely as a flat IVF with 64 lists at 1/4 the

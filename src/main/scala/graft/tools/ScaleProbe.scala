@@ -126,7 +126,7 @@ object ScaleProbe {
     //
     // `zipf` (round-13 verdict #5): the 31-word uniform vocabulary is the
     // driver generator's marginal, but it DENSIFIES word-graph queries —
-    // organic co-occurrence pairs grow ~137× for 10× docs (EdgeProbe), so
+    // organic co-occurrence pairs grow ~137× for 10× docs (measured), so
     // the graph fleet's sf10 exponents measured the corpus, not the
     // operators. Zipf mode instead draws tokens from a FIXED, effectively
     // unbounded rank universe (V = 10^7 ≫ any draw count; Zipf(s=1)
@@ -155,7 +155,7 @@ object ScaleProbe {
     val vocabArr = array(vocab.map(lit): _*)
     // Zipf word draw: u = uniform(0,1) per position, rank = ⌊V^u⌋ ∈ [1,V]
     // (inverse CDF of p(r) ∝ 1/r). Two modeling lessons are baked in,
-    // both found by measuring candidate growth (EdgeProbe) on earlier
+    // both found by measuring candidate growth on earlier
     // cuts: (1) token RENDERING — "w<rank>" tokens share numeric trigrams
     // ("142" ∈ w142, w1423, w2142 …), collapsing the char-3-gram space to
     // ~10³ all-high-df grams; tokens are instead 6-letter pseudo-words
@@ -356,6 +356,10 @@ object ScaleProbe {
       // free after cleanup — the space was all dead shuffle files)
       System.gc()
       Thread.sleep(2000)
+      // every timed run pays its own fits and mines: a memo warmed by the
+      // previous run of the same query would time a hit at one scale and
+      // a fit at the other
+      graft.Graft.clearSessionMemos()
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(q)(spark, dir).count()
       (System.nanoTime() - t0) / 1e9
