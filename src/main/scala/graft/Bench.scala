@@ -152,7 +152,7 @@ object Bench {
     // drives the final plan via toRdd so every output column is actually
     // produced — a count() would let Catalyst prune the decode chain.
     // Measured BEFORE the query passes with ≥ 8 warmup-absorbing passes:
-    // the decode chain C2-warms slowly (IngestProbe: 84k rec/s pass 1 →
+    // the decode chain C2-warms slowly (measured: 84k rec/s pass 1 →
     // ~420k by pass 8 at 32 threads), so a 2-pass min reports warmup, not
     // throughput. NOTE the number scales with SPARK_GRAFT_CPUS (~125k at
     // the local default of 4, ~420k at the driver's 32) — comparisons

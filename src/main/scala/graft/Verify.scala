@@ -29,7 +29,12 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        // catch-all, not NonFatal: one query's fatal error must not lose
+        // the other queries' results; same line form as Bench's FAIL
+        val msg = Option(e.getMessage)
+          .flatMap(_.linesIterator.nextOption()).getOrElse("")
+        System.err.println(
+          s"[verify] FAIL $name: ${e.getClass.getName}: $msg")
       }
       // Same hygiene as Bench: drop blocks iterative queries leave behind.
       spark.sparkContext.getPersistentRDDs.values

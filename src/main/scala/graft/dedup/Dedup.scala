@@ -34,7 +34,7 @@ object Dedup {
     * mins per shingle — not `n` separate array_min(transform(...)) passes:
     * that form repeats the `shingles(text)` subtree n times in the plan,
     * and tokenize+distinct is ~90 % of the work (measured 16×: 4.5 s vs
-    * 0.3 s over 500 docs, Q156Probe). Hash values are unchanged — each
+    * 0.3 s over 500 docs). Hash values are unchanged — each
     * shingle still hashes as xxhash64(shingle, seed) with IntegerType
     * seeds 0..n-1, so existing recall bounds and band keys are stable. */
   def minhashSignature(text: Column, n: Int = 16): Column =
@@ -158,7 +158,7 @@ object Dedup {
       // Tiny-graph regime: below `driverThreshold` edges the whole graph is
       // bounded model state (100 k × 16 B ≈ 1.6 MB — the KMeans-centroid
       // pattern), and per-round shuffle scheduling is pure latency
-      // (Q156Probe measured 4 s for a 250-edge graph — ~6 stages × 32
+      // (measured 4 s for a 250-edge graph — ~6 stages × 32
       // near-empty tasks per round). Collect once and run union-find on
       // the driver: exact, deterministic (same min-id labels), and zero
       // shuffles. This also keeps the session conf untouched — the

@@ -587,7 +587,7 @@ object Multimodal {
       * `AudioSystem.getAudioInputStream`/`write` re-run the provider
       * lookup on EVERY call behind a process-wide lock
       * (JDK13Services.getProviders is synchronized), which serializes all
-      * 32 decode threads — AudioProbe measured 32 threads at 0.7× the
+      * 32 decode threads — measured: 32 threads ran at 0.7× the
       * speed of ONE (and the q332/q333 real-sf1 scaling exponent at
       * 1.38/1.16 where every other heavy is ≤0.7). The provider objects
       * themselves (WaveFileReader/WaveFileWriter) are stateless and
@@ -639,7 +639,7 @@ object Multimodal {
       * AIFF, AU, SoftMidi, then WAVE, so a WAV corpus would otherwise pay
       * three failed sniffs (~21 µs of exceptions, including the Gervill
       * SoftMidi reader's 13 µs) before the 0.7 µs WaveFileReader hit —
-      * measured per-call costs from the AudioProbe investigation. */
+      * measured per-call costs. */
     @volatile private var preferredReader = 0
     private def openAudio(
         payload: Array[Byte]): Option[javax.sound.sampled.AudioInputStream] = {

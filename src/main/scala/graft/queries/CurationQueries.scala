@@ -29,7 +29,7 @@ object CurationQueries {
     * The token array gets its OWN projection before the gram transform:
     * with the split() inline, codegen re-evaluates it for every
     * element_at reference — 3·(n−2) splits per doc, measured 10×+ slower
-    * (the q176 NoveltyProbe finding: 5.0 s → 0.4 s on the same shape). */
+    * (the q176 finding: 5.0 s → 0.4 s on the same shape). */
   private def gramSets(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val w = col("w")

@@ -21,8 +21,7 @@ object FormatQueries {
     * unconditional overwrite would charge three corpus rewrites to every
     * bench pass). */
   private def fixtureDir(s: SparkSession, d: String): String =
-    cachedFixture(d, "fmt_q208", FixtureVersion,
-      Seq("csv/_SUCCESS", "orc/_SUCCESS", "json/_SUCCESS")) { dir =>
+    cachedFixture(d, "fmt_q208", FixtureVersion) { dir =>
       val ev = t(s, d, "events")
       // microsecond timestamps survive CSV/JSON only with an explicit
       // format; header on so the CSV read is schema-by-name, quoting
@@ -97,8 +96,7 @@ object FormatQueries {
         |WHERE ts >= TIMESTAMP '2024-01-15' AND ts < TIMESTAMP '2024-01-16'
         |GROUP BY event_type
         |ORDER BY event_type""".stripMargin) { (s, d) =>
-      val dir = cachedFixture(d, "part_q213", FixtureVersion,
-        Seq("_SUCCESS")) { dir =>
+      val dir = cachedFixture(d, "part_q213", FixtureVersion) { dir =>
         t(s, d, "events")
           .withColumn("year", date_format(col("ts"), "yyyy"))
           .withColumn("month", date_format(col("ts"), "MM"))
@@ -133,8 +131,7 @@ object FormatQueries {
         |         AS sum_value
         |FROM events
         |GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
-      val dir = cachedFixture(d, "evo_q214", FixtureVersion,
-        Seq("epoch1/_SUCCESS", "epoch2/_SUCCESS")) { dir =>
+      val dir = cachedFixture(d, "evo_q214", FixtureVersion) { dir =>
         val ev = t(s, d, "events")
         ev.filter(col("event_id") % 2 =!= 0)
           .select("event_id", "ts", "user_id", "event_type", "props")
@@ -188,10 +185,12 @@ object FormatQueries {
     // (PlanSpec pins the executed plan Exchange-free with broadcast
     // disabled). At 100 TB this is THE technique for a repeated join key:
     // the shuffle is paid once at write time and amortized over every
-    // subsequent join. Bucketing metadata lives in the session catalog
-    // (in-memory here), so each fresh session registers the tables once —
-    // re-registration writes only if the tables are absent. Oracle:
-    // identical aggregate computed from the raw flat table.
+    // subsequent join. The bucketed files are a [[cachedFixture]]; the
+    // bucketing metadata lives in the session catalog (in-memory here),
+    // so each session registers the two tables once, named after the
+    // fixture directory — a rewritten or same-named corpus gets its own
+    // key, hence its own tables. Oracle: identical aggregate computed
+    // from the raw flat table.
     QueryDef.sql(
       "q267_bucketed_join",
       """WITH prof AS (SELECT user_id, count(*) AS n_total
@@ -203,29 +202,33 @@ object FormatQueries {
         |FROM events e JOIN prof p ON e.user_id = p.user_id
         |GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
       graft.Graft.ensureConfigured(s)
+      val ev = t(s, d, "events")
+      val sides = Seq(
+        "events" -> ev.select("event_id", "user_id", "event_type", "value"),
+        "prof" -> ev.groupBy("user_id").agg(count(lit(1)).as("n_total")))
       // sanitize EVERY non-identifier char: sf dirs are "sf0.1" (dot) but
       // generated corpora are "graft-sf1-real" (hyphens) — both must make
-      // a valid unquoted table identifier (round-10 sf1 sweep failure)
-      val tag = new java.io.File(d).getName.replaceAll("[^A-Za-z0-9_]", "_")
-      val evTbl = s"graft_bkt_events_$tag"
-      val profTbl = s"graft_bkt_prof_$tag"
-      if (!s.catalog.tableExists(evTbl)) {
-        t(s, d, "events").select("event_id", "user_id", "event_type", "value")
-          .write.mode("overwrite")
-          .bucketBy(8, "user_id").sortBy("user_id")
-          .option("path", s"/tmp/graft_bkt_${tag}_events")
-          .saveAsTable(evTbl)
+      // a valid unquoted table identifier
+      def ident(path: String): String =
+        new java.io.File(path).getName.replaceAll("[^A-Za-z0-9_]", "_")
+      val dir = cachedFixture(d, "bkt_q267", FixtureVersion) { tmp =>
+        // bucketBy writes only through a catalog table: write via a
+        // throwaway external table, then drop the entry (files stay)
+        sides.foreach { case (n, df) =>
+          val scratch = s"${ident(tmp)}_$n"
+          df.write.bucketBy(8, "user_id").sortBy("user_id")
+            .option("path", s"$tmp/$n").saveAsTable(scratch)
+          s.sql(s"DROP TABLE $scratch")
+        }
       }
-      if (!s.catalog.tableExists(profTbl)) {
-        t(s, d, "events").groupBy("user_id")
-          .agg(count(lit(1)).as("n_total"))
-          .write.mode("overwrite")
-          .bucketBy(8, "user_id").sortBy("user_id")
-          .option("path", s"/tmp/graft_bkt_${tag}_prof")
-          .saveAsTable(profTbl)
+      sides.foreach { case (n, df) =>
+        val cols = df.schema.map(f => s"${f.name} ${f.dataType.sql}")
+        s.sql(s"CREATE TABLE IF NOT EXISTS ${ident(dir)}_$n " +
+          s"(${cols.mkString(", ")}) USING parquet CLUSTERED BY (user_id) " +
+          s"SORTED BY (user_id) INTO 8 BUCKETS LOCATION '$dir/$n'")
       }
-      s.table(evTbl)
-        .join(s.table(profTbl), "user_id")
+      s.table(s"${ident(dir)}_events")
+        .join(s.table(s"${ident(dir)}_prof"), "user_id")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           round(sum("value"), 6).as("sum_value"),

@@ -166,57 +166,14 @@ object IngestParity {
         |GROUP BY 1
         |ORDER BY cls""".stripMargin) { (s, d) =>
       // The envelope corpus is a deterministic function of (events table,
-      // envelope construction), so materialize it at most once and keep the
-      // timed query body read-only — an unconditional overwrite here charged
-      // a full corpus rewrite to every execution (most of q118's 10.6 s in
-      // BENCH_r04 was this fixture write). The dir is keyed on a FRESHNESS
-      // FINGERPRINT (round-5 ADVICE): the events parquet files'
-      // names/sizes/mtimes plus envelopeFixtureVersion — regenerating
-      // testdata in place, or changing envelopeFromEvents (and bumping the
-      // version), changes the key, so a stale fixture can never be read.
-      // _SUCCESS is the Hadoop commit marker: present ⇔ a prior write
-      // finished, so a torn write re-runs.
-      val src = new java.io.File(d, "events.parquet")
-      // Per-file FNV-1a over name|size|mtime PLUS the parquet footer tail
-      // (row-group metadata + column stats — any content change moves it),
-      // combined by SUM not XOR (xor lets equal terms cancel pairwise). A
-      // same-second in-place regeneration with identical names/sizes — the
-      // one case name|size|mtime alone cannot see — still changes the key.
-      def fileSig(f: java.io.File): Long = {
-        var h = 0xcbf29ce484222325L
-        def mix(b: Byte): Unit = { h ^= (b & 0xffL); h *= 0x100000001b3L }
-        s"${f.getName}|${f.length}|${f.lastModified}".getBytes("UTF-8").foreach(mix)
-        if (f.getName.endsWith(".parquet") && f.length > 0) {
-          val raf = new java.io.RandomAccessFile(f, "r")
-          try {
-            val n = math.min(1024L, f.length).toInt
-            raf.seek(f.length - n)
-            val buf = new Array[Byte](n)
-            raf.readFully(buf)
-            buf.foreach(mix)
-          } finally raf.close()
-        }
-        h
-      }
-      val stamp = Option(src.listFiles())
-        .map(_.map(fileSig).sum)
-        .getOrElse(src.lastModified())
-      val key = java.lang.Long.toHexString(stamp ^ envelopeFixtureVersion)
-      val base = s"graft_envsrc_q118_${new java.io.File(d).getName}_"
-      val dir = s"/tmp/$base$key"
-      if (!new java.io.File(dir, "_SUCCESS").exists()) {
-        // retire superseded fixture keys for this sf dir so /tmp doesn't
-        // accumulate one orphaned corpus per regeneration
-        Option(new java.io.File("/tmp").listFiles()).getOrElse(Array.empty)
-          .filter(f => f.getName.startsWith(base) && f.getName != s"$base$key")
-          .foreach { old =>
-            def rm(f: java.io.File): Unit = {
-              Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-              f.delete(); ()
-            }
-            rm(old)
-          }
-        envelopeFromEvents(s, d).select("data").write.mode("overwrite").text(dir)
+      // envelope construction), so it is a [[cachedFixture]] keyed on the
+      // events files and envelopeFixtureVersion, and the timed query body
+      // stays read-only — an unconditional overwrite here charged a full
+      // corpus rewrite to every execution (most of q118's 10.6 s in
+      // BENCH_r04 was this fixture write).
+      val dir = cachedFixture(d, "envsrc_q118", envelopeFixtureVersion) {
+        dir => envelopeFromEvents(s, d).select("data")
+          .write.mode("overwrite").text(dir)
       }
       val env = s.read.format("graft-envelope").load(dir)
         .select(col("recordId"), col("data"))

@@ -885,12 +885,10 @@ object MaintenanceQueries {
 
 /** q327's stage-zone fixture: one day of SOH envelopes ingested as two
   * micro-batches and compacted once (lazy deletes), so manifest v0 =
-  * two batch leaves and v1 = one compacted leaf. Built at most once per
-  * (sf dir, construction version) under /tmp — keyed on the events
-  * parquet's name|size|mtime signature like q118's fixture, so
-  * regenerated testdata orphans the old build — and registered with
-  * [[graft.sources.StageTimeTravelCatalog]] under a key-derived name.
-  * The query body itself stays read-only SQL. */
+  * two batch leaves and v1 = one compacted leaf. A [[cachedFixture]] over
+  * the events table, registered with
+  * [[graft.sources.StageTimeTravelCatalog]] under a name derived from the
+  * fixture directory. The query body itself stays read-only SQL. */
 private[queries] object TimeTravelFixture {
   // v2: manifests stamp committedAtMs (q331's TIMESTAMP AS OF axis)
   private val FixtureVersion = 2L
@@ -902,72 +900,38 @@ private[queries] object TimeTravelFixture {
     * queries that need the manifest itself (q331 derives the compaction
     * commit's walltime from it). */
   def ensureWithPaths(s: org.apache.spark.sql.SparkSession, d: String)
-      : (String, graft.streaming.StreamingIngest.Paths) =
-    synchronized {
-      val sfDir = new java.io.File(d).getCanonicalFile
-      val src = new java.io.File(sfDir, "events.parquet")
-      val stamp = Option(src.listFiles())
-        .map(_.map(f => s"${f.getName}|${f.length}|${f.lastModified}"
-          .hashCode.toLong).sum)
-        .getOrElse(src.lastModified())
-      // Key folds in the sf dir's FULL canonical path (round-11 ADVICE):
-      // basename-only keys let two corpora named alike under different
-      // parents evict each other's fixtures. The path hash lives in the
-      // cleanup prefix too, so superseded-key retirement only ever touches
-      // THIS corpus's stale builds.
-      val pathKey = java.lang.Integer.toHexString(sfDir.getPath.hashCode)
-      val key = java.lang.Long.toHexString(
-        (stamp ^ FixtureVersion) & 0xffffffffL)
-      val base = s"graft_ttravel_${sfDir.getName}_${pathKey}_"
-      val dir = s"/tmp/$base$key"
-      val tbl = s"tt_${pathKey}_$key"
-      val paths = graft.streaming.StreamingIngest.Paths(dir)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      if (!new java.io.File(dir, "_TT_READY").exists()) {
-        // retire superseded stamp keys for this corpus path (q118
-        // discipline); the prefix carries pathKey, so other corpora —
-        // even with the same basename — are never touched
-        Option(new java.io.File("/tmp").listFiles()).getOrElse(Array.empty)
-          .filter(f => f.getName.startsWith(base) &&
-            f.getName != s"$base$key")
-          .foreach(rm)
-        // Build into a process-private temp dir and RENAME into place
-        // (round-11 ADVICE): the synchronized block is JVM-local, so a
-        // concurrent JVM could otherwise read a half-built fixture. The
-        // rename is atomic on one filesystem; _TT_READY rides inside it.
-        val tmp = new java.io.File(
-          s"/tmp/.$base$key.build-${java.lang.ProcessHandle.current().pid()}")
-        rm(tmp)
-        val tmpPaths = graft.streaming.StreamingIngest.Paths(tmp.getPath)
-        val day = t(s, d, "events")
-          .filter(to_date(col("ts")) === lit("2024-01-05"))
-        val env = IngestParity.envelopeFrom(s, day)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          Seq(0L, 1L).foreach { b =>
-            graft.streaming.StreamingIngest.writeBatch(
-              env.filter(col("recordId").cast("long") % 2 === b),
-              graft.ingest.GeoDim.empty(s), tmpPaths, b)
-          }
-        } finally env.unpersist(blocking = false)
-        graft.streaming.StageCompactor.compactPartition(
-          s, tmpPaths, "2024", "01", "05", lazyDeletes = true)
-        new java.io.File(tmp, "_TT_READY").createNewFile()
-        if (!tmp.renameTo(new java.io.File(dir))) {
-          // lost the cross-JVM race — the winner's fixture is equivalent
-          // (same stamp key ⇒ same inputs); keep theirs, drop ours
-          rm(tmp)
-          require(new java.io.File(dir, "_TT_READY").exists(),
-            s"time-travel fixture rename to $dir failed and no ready " +
-              "fixture exists")
+      : (String, graft.streaming.StreamingIngest.Paths) = {
+    val dir = cachedFixture(d, "ttravel", FixtureVersion) { tmp =>
+      val tmpPaths = graft.streaming.StreamingIngest.Paths(tmp)
+      val env = oneDayEnvelopes(s, d)
+      try {
+        Seq(0L, 1L).foreach { b =>
+          graft.streaming.StreamingIngest.writeBatch(
+            env.filter(col("recordId").cast("long") % 2 === b),
+            graft.ingest.GeoDim.empty(s), tmpPaths, b)
         }
-      }
-      graft.sources.StageTimeTravelCatalog.register(tbl, paths)
-      (tbl, paths)
+      } finally env.unpersist(blocking = false)
+      graft.streaming.StageCompactor.compactPartition(
+        s, tmpPaths, "2024", "01", "05", lazyDeletes = true)
     }
+    (register(dir), graft.streaming.StreamingIngest.Paths(dir))
+  }
+
+  /** The 2024-01-05 slice of events as persisted SOH envelopes. */
+  def oneDayEnvelopes(s: org.apache.spark.sql.SparkSession, d: String)
+      : org.apache.spark.sql.DataFrame =
+    IngestParity.envelopeFrom(s, t(s, d, "events")
+      .filter(to_date(col("ts")) === lit("2024-01-05")))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** Registers a stage-zone fixture under a name derived from its
+    * directory, so each key gets its own catalog entry. */
+  def register(dir: String): String = {
+    val tbl = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9_]", "_")
+    graft.sources.StageTimeTravelCatalog.register(tbl,
+      graft.streaming.StreamingIngest.Paths(dir))
+    tbl
+  }
 }
 
 /** q343's stage-zone fixture: one day ingested as THREE micro-batches,
@@ -976,10 +940,8 @@ private[queries] object TimeTravelFixture {
   * whose `retainMs` still covers v1 — the age axis HOLDS v1 above the
   * `retainVersions = 1` count floor (floor stays 1, no snapshot pruned,
   * only the two pre-history-only originals reclaimed) — then a vacuum
-  * whose window has moved past v1, reclaiming it (floor 2). Built at
-  * most once per (sf dir, construction version) under /tmp with the same
-  * full-path keying, superseded-key retirement, and build-then-rename
-  * publication as [[TimeTravelFixture]]; BOTH
+  * whose window has moved past v1, reclaiming it (floor 2). A
+  * [[cachedFixture]] like [[TimeTravelFixture]]; BOTH
   * [[graft.streaming.StageCompactor.VacuumReport]]s persist inside the
   * fixture (vacuums happen at build time, so a cached fixture must still
   * answer what each stage reclaimed). */
@@ -989,94 +951,59 @@ private[queries] object VacuumFixture {
 
   def ensure(s: org.apache.spark.sql.SparkSession, d: String)
       : (String, graft.streaming.StageCompactor.VacuumReport,
-         graft.streaming.StageCompactor.VacuumReport) =
-    synchronized {
-      val sfDir = new java.io.File(d).getCanonicalFile
-      val src = new java.io.File(sfDir, "events.parquet")
-      val stamp = Option(src.listFiles())
-        .map(_.map(f => s"${f.getName}|${f.length}|${f.lastModified}"
-          .hashCode.toLong).sum)
-        .getOrElse(src.lastModified())
-      val pathKey = java.lang.Integer.toHexString(sfDir.getPath.hashCode)
-      val key = java.lang.Long.toHexString(
-        (stamp ^ FixtureVersion) & 0xffffffffL)
-      val base = s"graft_vacuum_${sfDir.getName}_${pathKey}_"
-      val dir = s"/tmp/$base$key"
-      val tbl = s"vac_${pathKey}_$key"
-      val paths = graft.streaming.StreamingIngest.Paths(dir)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      if (!new java.io.File(dir, "_VAC_READY").exists()) {
-        Option(new java.io.File("/tmp").listFiles()).getOrElse(Array.empty)
-          .filter(f => f.getName.startsWith(base) &&
-            f.getName != s"$base$key")
-          .foreach(rm)
-        val tmp = new java.io.File(
-          s"/tmp/.$base$key.build-${java.lang.ProcessHandle.current().pid()}")
-        rm(tmp)
-        val tmpPaths = graft.streaming.StreamingIngest.Paths(tmp.getPath)
-        val day = t(s, d, "events")
-          .filter(to_date(col("ts")) === lit("2024-01-05"))
-        val env = IngestParity.envelopeFrom(s, day)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          Seq(0L, 1L).foreach { b =>
-            graft.streaming.StreamingIngest.writeBatch(
-              env.filter(col("recordId").cast("long") % 3 === b),
-              graft.ingest.GeoDim.empty(s), tmpPaths, b)
-          }
-          graft.streaming.StageCompactor.compactPartition(
-            s, tmpPaths, "2024", "01", "05", lazyDeletes = true) // v1
-          // commit stamps have ms resolution; the age cut below needs
-          // t2 > t1 to be deterministic
-          Thread.sleep(15)
+         graft.streaming.StageCompactor.VacuumReport) = {
+    val dir = cachedFixture(d, "vacuum", FixtureVersion) { tmp =>
+      val tmpPaths = graft.streaming.StreamingIngest.Paths(tmp)
+      val env = TimeTravelFixture.oneDayEnvelopes(s, d)
+      try {
+        Seq(0L, 1L).foreach { b =>
           graft.streaming.StreamingIngest.writeBatch(
-            env.filter(col("recordId").cast("long") % 3 === 2),
-            graft.ingest.GeoDim.empty(s), tmpPaths, 2L)
-        } finally env.unpersist(blocking = false)
+            env.filter(col("recordId").cast("long") % 3 === b),
+            graft.ingest.GeoDim.empty(s), tmpPaths, b)
+        }
         graft.streaming.StageCompactor.compactPartition(
-          s, tmpPaths, "2024", "01", "05", lazyDeletes = true)   // v2
-        val stageRoot = new org.apache.hadoop.fs.Path(tmpPaths.stage)
-        val fs = stageRoot.getFileSystem(
-          s.sparkContext.hadoopConfiguration)
-        val t1 = graft.streaming.StageManifest
-          .readVersion(fs, stageRoot, 1L).get.committedAtMs
-        val t2 = graft.streaming.StageManifest
-          .readVersion(fs, stageRoot, 2L).get.committedAtMs
-        // stage 1 — AGE HOLD: the window still covers v1, so the age
-        // axis retains it above the count floor; only the two originals
-        // no retained snapshot can see are reclaimed
-        val repHold = graft.streaming.StageCompactor.vacuum(
-          s, tmpPaths, retainVersions = 1,
-          retainMs = (t2 - t1) + 1000L, nowMs = t2)
-        // stage 2 — AGE CUT: the window has moved past v1 (old AND
-        // beyond the count floor); v2 survives on the count safety floor
-        val repCut = graft.streaming.StageCompactor.vacuum(
-          s, tmpPaths, retainVersions = 1,
-          retainMs = (t2 - t1) - 1L, nowMs = t2 + (t2 - t1))
-        val w = new java.io.PrintWriter(
-          new java.io.File(tmp, "_VACUUM_REPORT"), "UTF-8")
-        try w.print(Seq(repHold, repCut).map(r =>
-          s"${r.floorVersion} ${r.nVersionsRetained} ${r.nVersionsPruned} " +
-            s"${r.nLeavesDeleted} ${r.bytesReclaimed}").mkString("\n"))
-        finally w.close()
-        new java.io.File(tmp, "_VAC_READY").createNewFile()
-        if (!tmp.renameTo(new java.io.File(dir))) {
-          rm(tmp)
-          require(new java.io.File(dir, "_VAC_READY").exists(),
-            s"vacuum fixture rename to $dir failed and no ready fixture exists")
-        }
-      }
-      val Seq(repHold, repCut) = scala.io.Source.fromFile(
-        new java.io.File(dir, "_VACUUM_REPORT"), "UTF-8").mkString
-        .trim.linesIterator.toSeq.map { line =>
-          val p = line.trim.split(" ")
-          graft.streaming.StageCompactor.VacuumReport(
-            p(0).toLong, p(1).toInt, p(2).toInt, p(3).toInt, p(4).toLong)
-        }
-      graft.sources.StageTimeTravelCatalog.register(tbl, paths)
-      (tbl, repHold, repCut)
+          s, tmpPaths, "2024", "01", "05", lazyDeletes = true) // v1
+        // commit stamps have ms resolution; the age cut below needs
+        // t2 > t1 to be deterministic
+        Thread.sleep(15)
+        graft.streaming.StreamingIngest.writeBatch(
+          env.filter(col("recordId").cast("long") % 3 === 2),
+          graft.ingest.GeoDim.empty(s), tmpPaths, 2L)
+      } finally env.unpersist(blocking = false)
+      graft.streaming.StageCompactor.compactPartition(
+        s, tmpPaths, "2024", "01", "05", lazyDeletes = true)   // v2
+      val stageRoot = new org.apache.hadoop.fs.Path(tmpPaths.stage)
+      val fs = stageRoot.getFileSystem(
+        s.sparkContext.hadoopConfiguration)
+      val t1 = graft.streaming.StageManifest
+        .readVersion(fs, stageRoot, 1L).get.committedAtMs
+      val t2 = graft.streaming.StageManifest
+        .readVersion(fs, stageRoot, 2L).get.committedAtMs
+      // stage 1 — AGE HOLD: the window still covers v1, so the age
+      // axis retains it above the count floor; only the two originals
+      // no retained snapshot can see are reclaimed
+      val repHold = graft.streaming.StageCompactor.vacuum(
+        s, tmpPaths, retainVersions = 1,
+        retainMs = (t2 - t1) + 1000L, nowMs = t2)
+      // stage 2 — AGE CUT: the window has moved past v1 (old AND
+      // beyond the count floor); v2 survives on the count safety floor
+      val repCut = graft.streaming.StageCompactor.vacuum(
+        s, tmpPaths, retainVersions = 1,
+        retainMs = (t2 - t1) - 1L, nowMs = t2 + (t2 - t1))
+      val w = new java.io.PrintWriter(
+        new java.io.File(tmp, "_VACUUM_REPORT"), "UTF-8")
+      try w.print(Seq(repHold, repCut).map(r =>
+        s"${r.floorVersion} ${r.nVersionsRetained} ${r.nVersionsPruned} " +
+          s"${r.nLeavesDeleted} ${r.bytesReclaimed}").mkString("\n"))
+      finally w.close()
     }
+    val Seq(repHold, repCut) = scala.io.Source.fromFile(
+      new java.io.File(dir, "_VACUUM_REPORT"), "UTF-8").mkString
+      .trim.linesIterator.toSeq.map { line =>
+        val p = line.trim.split(" ")
+        graft.streaming.StageCompactor.VacuumReport(
+          p(0).toLong, p(1).toInt, p(2).toInt, p(3).toInt, p(4).toLong)
+      }
+    (TimeTravelFixture.register(dir), repHold, repCut)
+  }
 }

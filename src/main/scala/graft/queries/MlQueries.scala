@@ -59,7 +59,7 @@ object MlQueries {
     // arithmetic: norms are exact to 1e-6, but orthogonality gets a 0.05
     // ceiling — the deflated power iteration converges slowly when
     // eigenvalues are near-tied (isotropic corpus: measured |c1·c2| ≈
-    // 6e-4 at sf0.01, 3e-3 at sf0.1, PcaProbe), while a MISSING deflation
+    // 6e-4 at sf0.01, 3e-3 at sf0.1), while a MISSING deflation
     // reads ≈ 1. The distributed flags
     // come from one aggregation over the projected corpus: centered
     // projections average ~0 (mean_ok, 1e-6 ceiling vs ~1e-12 float
@@ -151,7 +151,7 @@ object MlQueries {
         // iters=16/lr=1.0: at sf0.1 the 8-iter lr=2.0 fit left class 1 at
         // 0.41 accuracy (oscillating step on the 10× corpus) while 16
         // gentler steps reach 1.0000 on BOTH classes at sf0.01 AND sf0.1
-        // (LogRegProbe) — the acc_ok>=0.9 flag now has full margin at
+        // — the acc_ok>=0.9 flag now has full margin at
         // every gated scale, not just the sf0.01 gate.
         val w = LogReg.train(feats, nFeatures = 512, iters = 16, lr = 1.0)
         feats

@@ -963,11 +963,7 @@ object MultimodalQueries {
       // process start clean.
       val runRoot = new java.io.File(
         s"/tmp/graft_q342_run_${java.lang.ProcessHandle.current().pid()}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(runRoot)
+      rmTree(runRoot)
       graft.streaming.StreamingMultimodal.runFileToFile(s, srcDir,
         s"${runRoot.getPath}/out", s"${runRoot.getPath}/ckpt")
       graft.streaming.StreamingMultimodal
@@ -1064,11 +1060,7 @@ object MultimodalQueries {
       val srcDir = MediaStreamFixture.ensure(s, d, kind = "audio")
       val runRoot = new java.io.File(
         s"/tmp/graft_q345_run_${java.lang.ProcessHandle.current().pid()}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(runRoot)
+      rmTree(runRoot)
       graft.streaming.StreamingMultimodal.runAudioToFile(s, srcDir,
         s"${runRoot.getPath}/out", s"${runRoot.getPath}/ckpt")
       graft.streaming.StreamingMultimodal
@@ -1110,11 +1102,7 @@ object MultimodalQueries {
       val srcDir = MediaStreamFixture.ensure(s, d, kind = "video")
       val runRoot = new java.io.File(
         s"/tmp/graft_q346_run_${java.lang.ProcessHandle.current().pid()}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(runRoot)
+      rmTree(runRoot)
       graft.streaming.StreamingMultimodal.runVideoToFile(s, srcDir,
         s"${runRoot.getPath}/out", s"${runRoot.getPath}/ckpt")
       graft.streaming.StreamingMultimodal
@@ -1283,11 +1271,7 @@ object MultimodalQueries {
       val srcDir = MediaStreamFixture.ensure(s, d, kind = "mjpegdup")
       val runRoot = new java.io.File(
         s"/tmp/graft_q349_run_${java.lang.ProcessHandle.current().pid()}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(runRoot)
+      rmTree(runRoot)
       graft.streaming.StreamingMultimodal.runMjpegFingerprintToFile(s,
         srcDir, s"${runRoot.getPath}/out", s"${runRoot.getPath}/ckpt")
       val bands = graft.streaming.StreamingMultimodal
@@ -1329,13 +1313,12 @@ object MultimodalQueries {
   )
 }
 
-/** q342/q345/q346's media-corpus fixtures: the q326 PNG / q332 WAV /
-  * q334 AVI payload corpora materialized as parquet under /tmp, once per
-  * (sf dir, modality, construction version) — the streaming queries need
-  * a file SOURCE, and re-encoding 500-50k payloads per execution would
-  * charge fixture construction to every run (the q118 lesson). Same
-  * full-path keying, superseded-key retirement, and build-then-rename
-  * publication as TimeTravelFixture. */
+/** q342/q345/q346/q349's media-corpus fixtures: the q326 PNG / q332 WAV
+  * / q334 AVI / q344 MJPEG payload corpora materialized as parquet, one
+  * [[cachedFixture]] per modality over the documents table — the
+  * streaming queries need a file SOURCE, and re-encoding 500-50k
+  * payloads per execution would charge fixture construction to every run
+  * (the q118 lesson). */
 private[queries] object MediaStreamFixture {
   // v6: kind-dependent FILE COUNT — mjpegdup (the one decode-heavy
   // streaming corpus, q349) writes 8 files so its decode parallelizes;
@@ -1345,8 +1328,7 @@ private[queries] object MediaStreamFixture {
   // Fixture ENCODE stays parallel either way (fixtureIds fans the
   // synthesis out; the repartition below only moves encoded payloads).
   // (v5: full fan-out; v4: twin offsets to 2^40; v3: % 7 audio schedule
-  // with IMA-ADPCM; v2: G.711.) The version participates in the key, so
-  // stale builds retire.
+  // with IMA-ADPCM; v2: G.711.)
   private val FixtureVersion = 6L
 
   private def fixtureFiles(s: org.apache.spark.sql.SparkSession,
@@ -1355,61 +1337,31 @@ private[queries] object MediaStreamFixture {
       math.min(8, s.sparkContext.defaultParallelism).max(1)
     else 1
 
+  /** The file count is a key param: it depends on the creating session's
+    * parallelism, and an mjpegdup fixture built by a low-core session must
+    * not be reused by a 32-core one with q349's decode parallelism
+    * degraded. */
   def ensure(s: org.apache.spark.sql.SparkSession, d: String,
-      kind: String = "image"): String =
-    synchronized {
-      val sfDir = new java.io.File(d).getCanonicalFile
-      val src = new java.io.File(sfDir, "documents.parquet")
-      val stamp = Option(src.listFiles())
-        .map(_.map(f => s"${f.getName}|${f.length}|${f.lastModified}"
-          .hashCode.toLong).sum)
-        .getOrElse(src.lastModified())
-      val pathKey = java.lang.Integer.toHexString(sfDir.getPath.hashCode)
-      // kind is part of the DIRECTORY base below, so cross-kind keys can
-      // never collide; the key folds (stamp, version, FILE COUNT) — the
-      // count depends on the creating session's parallelism (round-16
-      // ADVICE #4: an mjpegdup fixture built by a low-core session would
-      // otherwise be silently reused by later 32-core sessions with the
-      // q349 decode parallelism the split exists for degraded)
-      val key = java.lang.Long.toHexString(
-        (stamp ^ FixtureVersion) & 0xffffffffL) +
-        s"f${fixtureFiles(s, kind)}"
-      val base = s"graft_media${if (kind == "image") "" else s"_$kind"}_" +
-        s"${sfDir.getName}_${pathKey}_"
-      val dir = s"/tmp/$base$key"
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
+      kind: String = "image"): String = {
+    val files = fixtureFiles(s, kind)
+    val name = if (kind == "image") "media" else s"media_$kind"
+    val dir = cachedFixture(d, name, FixtureVersion, "documents",
+        Seq(files)) { tmp =>
+      val corpus = kind match {
+        case "image" => Multimodal.syntheticImages(t(s, d, "documents"))
+        case "audio" => Multimodal.syntheticAudio(t(s, d, "documents"))
+        case "video" => Multimodal.syntheticVideos(t(s, d, "documents"))
+        case "mjpegdup" => // q349: q344's base ∪ injected-twin corpus
+          val docs = t(s, d, "documents")
+          Multimodal.syntheticMjpegVideos(docs, smooth = false).union(
+            Multimodal.syntheticMjpegVideos(
+              docs.filter(col("doc_id") % 5 === 0), idOffset = 1099511627776L,
+              bright = true, smooth = false))
+        case other => sys.error(s"unknown media fixture kind: $other")
       }
-      if (!new java.io.File(dir, "_MEDIA_READY").exists()) {
-        Option(new java.io.File("/tmp").listFiles()).getOrElse(Array.empty)
-          .filter(f => f.getName.startsWith(base) &&
-            f.getName != s"$base$key")
-          .foreach(rm)
-        val tmp = new java.io.File(
-          s"/tmp/.$base$key.build-${java.lang.ProcessHandle.current().pid()}")
-        rm(tmp)
-        val corpus = kind match {
-          case "image" => Multimodal.syntheticImages(t(s, d, "documents"))
-          case "audio" => Multimodal.syntheticAudio(t(s, d, "documents"))
-          case "video" => Multimodal.syntheticVideos(t(s, d, "documents"))
-          case "mjpegdup" => // q349: q344's base ∪ injected-twin corpus
-            val docs = t(s, d, "documents")
-            Multimodal.syntheticMjpegVideos(docs, smooth = false).union(
-              Multimodal.syntheticMjpegVideos(
-                docs.filter(col("doc_id") % 5 === 0), idOffset = 1099511627776L,
-                bright = true, smooth = false))
-          case other => sys.error(s"unknown media fixture kind: $other")
-        }
-        corpus.toDF().repartition(fixtureFiles(s, kind))
-          .write.mode("overwrite").parquet(s"${tmp.getPath}/media")
-        new java.io.File(tmp, "_MEDIA_READY").createNewFile()
-        if (!tmp.renameTo(new java.io.File(dir))) {
-          rm(tmp)
-          require(new java.io.File(dir, "_MEDIA_READY").exists(),
-            s"media fixture rename to $dir failed and no ready fixture exists")
-        }
-      }
-      s"$dir/media"
+      corpus.toDF().repartition(files)
+        .write.mode("overwrite").parquet(s"$tmp/media")
     }
+    s"$dir/media"
+  }
 }

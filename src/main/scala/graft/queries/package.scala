@@ -163,53 +163,95 @@ package object queries {
       .cast("long")
   }
 
-  /** q118's freshness-fingerprint fixture discipline, shared (q208, q213):
-    * a derived on-disk corpus is rewritten only when the SOURCE parquet's
-    * content fingerprint (per-file FNV-1a over name|size|mtime + parquet
-    * footer tail, summed) or the construction version changes; superseded
-    * keys for the same base name are retired so /tmp doesn't accumulate.
-    * `ready` lists the marker files that must all exist for reuse.
-    * `sourceTable` names the parquet whose content stamps the key — it must
-    * be the table the fixture is DERIVED from, or a change to that table
-    * would silently reuse stale /tmp data (round-8 ADVICE #3). */
-  def cachedFixture(sfDir: String, baseName: String, version: Long,
-      ready: Seq[String], sourceTable: String = "events")
-      (write: String => Unit): String = {
-    val src = new java.io.File(sfDir, s"$sourceTable.parquet")
-    def fileSig(f: java.io.File): Long = {
-      var h = 0xcbf29ce484222325L
-      def mix(b: Byte): Unit = { h ^= (b & 0xffL); h *= 0x100000001b3L }
-      s"${f.getName}|${f.length}|${f.lastModified}".getBytes("UTF-8").foreach(mix)
-      if (f.getName.endsWith(".parquet") && f.length > 0) {
-        val raf = new java.io.RandomAccessFile(f, "r")
+  /** The on-disk fixture cache: every derived corpus a query reads from
+    * /tmp (q118, q208, q213, q214, q267, q327/q331, q343, q342–q349) is
+    * built here and nowhere else.
+    *
+    * Key: `name` + `version` + `params` + the sf dir's canonical path + a
+    * 64-bit stamp over every data file of `sourceTable` (the file itself
+    * for a single-file table, else its non-hidden files, recursively):
+    * name|size|mtime plus the 1 KB footer tail, so a source rewritten
+    * with its mtime kept still moves the key. `sourceTable` must be the
+    * table the fixture is DERIVED from.
+    *
+    * Publish: `build` writes into a private temp sibling, `_READY` is
+    * written last, and one atomic rename makes the directory visible — a
+    * reader can never observe a partial fixture. A build that throws
+    * leaves nothing behind. Losing a cross-JVM rename race discards the
+    * own build and keeps the winner's (same key ⇒ same inputs).
+    *
+    * Lock: one lock per key, so two callers of one key build once and
+    * different keys never wait on each other's Spark jobs.
+    *
+    * Retirement: after a publish, superseded keys under the same name AND
+    * canonical-path hash are deleted — a same-named corpus elsewhere is
+    * never touched. */
+  def cachedFixture(sfDir: String, name: String, version: Long,
+      sourceTable: String = "events", params: Seq[Any] = Nil)
+      (build: String => Unit): String = {
+    val sf = new java.io.File(sfDir).getCanonicalFile
+    val prefix = s"graft_${name}_${sf.getName}_" +
+      s"${java.lang.Long.toHexString(fnv(sf.getPath.getBytes("UTF-8")))}_"
+    val src = new java.io.File(sf, s"$sourceTable.parquet")
+    val head = s"$version|${params.mkString(",")}".getBytes("UTF-8")
+    val key = java.lang.Long.toHexString(
+      dataFiles(src).foldLeft(fnv(head))((h, f) => fnv(fileStamp(f), h)))
+    val dir = new java.io.File(FixtureRoot, prefix + key)
+    val ready = new java.io.File(dir, "_READY")
+    if (!ready.exists()) fixtureLocks.computeIfAbsent(dir.getPath,
+        _ => new Object).synchronized {
+      if (!ready.exists()) {
+        val tmp = java.nio.file.Files.createTempDirectory(
+          FixtureRoot.toPath, s".$prefix$key.build-").toFile
         try {
-          val n = math.min(1024L, f.length).toInt
-          raf.seek(f.length - n)
-          val buf = new Array[Byte](n)
-          raf.readFully(buf)
-          buf.foreach(mix)
-        } finally raf.close()
+          build(tmp.getPath)
+          new java.io.File(tmp, "_READY").createNewFile()
+          if (!tmp.renameTo(dir))
+            require(ready.exists(),
+              s"fixture rename to $dir failed and no ready fixture exists")
+        } finally rmTree(tmp) // no-op once renamed
+        Option(FixtureRoot.listFiles()).getOrElse(Array.empty)
+          .filter(f => f.getName.startsWith(prefix) && f != dir)
+          .foreach(rmTree)
       }
-      h
     }
-    val stamp = Option(src.listFiles()).map(_.map(fileSig).sum)
-      .getOrElse(src.lastModified())
-    val key = java.lang.Long.toHexString(stamp ^ version)
-    val base = s"graft_${baseName}_${new java.io.File(sfDir).getName}_"
-    val dir = s"/tmp/$base$key"
-    if (!ready.forall(m => new java.io.File(dir, m).exists())) {
-      Option(new java.io.File("/tmp").listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith(base) && f.getName != s"$base$key")
-        .foreach { old =>
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-            f.delete(); ()
-          }
-          rm(old)
-        }
-      write(dir)
+    dir.getPath
+  }
+
+  private val FixtureRoot = new java.io.File("/tmp")
+  private val fixtureLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  /** FNV-1a 64 over `bytes`, continuing from `h`. */
+  private def fnv(bytes: Array[Byte], h0: Long = 0xcbf29ce484222325L): Long =
+    bytes.foldLeft(h0)((h, b) => (h ^ (b & 0xffL)) * 0x100000001b3L)
+
+  /** A table's data files in a stable order: the file itself, or every
+    * non-hidden file under the table directory. */
+  private def dataFiles(f: java.io.File): Seq[java.io.File] =
+    Option(f.listFiles()) match {
+      case None => if (f.isFile) Seq(f) else Nil
+      case Some(fs) => fs.toSeq
+        .filterNot(c => c.getName.startsWith("_") || c.getName.startsWith("."))
+        .sortBy(_.getName).flatMap(dataFiles)
     }
-    dir
+
+  /** name|size|mtime plus the last 1 KB (the parquet footer: row-group
+    * metadata and column stats move on any content change). */
+  private def fileStamp(f: java.io.File): Array[Byte] = {
+    val raf = new java.io.RandomAccessFile(f, "r")
+    try {
+      val tail = new Array[Byte](math.min(1024L, raf.length).toInt)
+      raf.seek(raf.length - tail.length)
+      raf.readFully(tail)
+      s"${f.getName}|${raf.length}|${f.lastModified}|".getBytes("UTF-8") ++ tail
+    } finally raf.close()
+  }
+
+  /** Recursive delete; a missing path is a no-op. */
+  def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
+    f.delete(); ()
   }
 
   /** q90/q98's injected-duplicate construction: every document re-appears

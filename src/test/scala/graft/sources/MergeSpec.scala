@@ -8,7 +8,7 @@ import graft.SparkTestSession
   * group-based rewrite into ReplaceData (the Iceberg-style copy-on-write
   * plan), UPDATE and DELETE work as statements, unmatched target rows are
   * kept, and the writer sees the declared write schema (the
-  * metadata-column projection contract MergeProbe pinned — without a
+  * metadata-column projection contract — without a
   * declared metadata column Spark hands the writer raw MergeRows output,
   * __row_operation included). */
 class MergeSpec extends AnyFunSuite {
