@@ -69,16 +69,12 @@ object EnvelopeSources {
     * the size cap — `maxBytesPerTrigger` bounds how much backlog one
     * micro-batch admits (file granularity: at least one file per batch),
     * so a burst drains as several bounded batches instead of one giant one.
-    * `maxFilesPerTrigger` is the coarser count-based cap; when both are
-    * set Spark applies whichever limit is hit first. The byte cap is a
-    * plain positive integer (no "64m" suffixes — the option rejects them);
-    * default = the reference's 64 MB. */
+    * The byte cap is a plain positive integer (no "64m" suffixes — the
+    * option rejects them); default = the reference's 64 MB. */
   def textLineStream(spark: SparkSession, dir: String,
-      maxBytesPerTrigger: Option[Long] = Some(64L * 1024 * 1024),
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+      maxBytesPerTrigger: Option[Long] = Some(64L * 1024 * 1024)): DataFrame = {
     val r0 = spark.readStream
     val r1 = maxBytesPerTrigger.fold(r0)(b => r0.option("maxBytesPerTrigger", b.toString))
-    val r2 = maxFilesPerTrigger.fold(r1)(n => r1.option("maxFilesPerTrigger", n))
-    fromTextLines(r2.text(dir))
+    fromTextLines(r1.text(dir))
   }
 }

@@ -1,6 +1,8 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 import graft.ingest.SchemaDrift
 
@@ -39,10 +41,11 @@ object StageCatalog {
       .filterNot(f => partitionCols.contains(f.name))
 
   /** (Re)register the zone at `paths.stage` as external partitioned table
-    * `table`, discover every on-disk partition, and report LOG-only schema
-    * drift of the landed files against the declared contract. Idempotent:
-    * DROP + CREATE + RECOVER, so a re-run after new days/batches land (the
-    * crawler's nightly role) converges to the full on-disk state. */
+    * `table`, register every on-disk partition the stage manifest shows,
+    * and report LOG-only schema drift of the landed files against the
+    * declared contract. Idempotent: DROP + CREATE + RECOVER, so a re-run
+    * after new days/batches land (the crawler's nightly role) converges to
+    * the visible on-disk state. */
   def register(spark: SparkSession, paths: StreamingIngest.Paths,
       table: String = "stage"): Registration = {
     graft.Graft.ensureConfigured(spark)
@@ -53,7 +56,7 @@ object StageCatalog {
       |USING parquet
       |PARTITIONED BY (${partitionCols.map(c => s"`$c`").mkString(", ")})
       |LOCATION '${paths.stage}'""".stripMargin)
-    spark.catalog.recoverPartitions(table)
+    recoverVisible(spark, table)
     Registration(table, listPartitions(spark, table), driftReport(spark, paths))
   }
 
@@ -62,8 +65,33 @@ object StageCatalog {
     * in this pass — the crawler's "N partitions added" signal. */
   def recoverPartitions(spark: SparkSession, table: String): Seq[String] = {
     val before = listPartitions(spark, table).toSet
-    spark.catalog.recoverPartitions(table)
+    recoverVisible(spark, table)
     listPartitions(spark, table).filterNot(before)
+  }
+
+  /** `RECOVER PARTITIONS` registers every `batch_id=*` directory on disk;
+    * drop the ones the stage manifest hides (ingest leaves retired by a
+    * compaction whose deletes are still pending, compacted leaves not yet
+    * committed), so catalog SQL reads exactly what
+    * [[StreamingIngest.stageTable]] reads. The table is EXTERNAL, so
+    * dropping a partition keeps its files. */
+  private def recoverVisible(spark: SparkSession, table: String): Unit = {
+    spark.catalog.recoverPartitions(table)
+    val root = new Path(spark.sql(s"DESCRIBE TABLE EXTENDED `$table`")
+      .filter(col("col_name") === "Location").head().getString(1))
+    val snapshot = StageManifest.read(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+    val hidden = listPartitions(spark, table).filterNot { spec =>
+      val cut = spec.lastIndexOf('/')
+      snapshot.day(spec.take(cut)).includes(spec.drop(cut + 1))
+    }
+    if (hidden.nonEmpty) {
+      val specs = hidden.map(_.split('/').map { kv =>
+        val Array(k, v) = kv.split("=", 2)
+        s"`$k` = '$v'"
+      }.mkString("PARTITION (", ", ", ")"))
+      spark.sql(s"ALTER TABLE `$table` DROP IF EXISTS ${specs.mkString(", ")}")
+    }
   }
 
   /** Registered partition specs, `year=…/month=…/day=…/batch_id=…`, sorted. */

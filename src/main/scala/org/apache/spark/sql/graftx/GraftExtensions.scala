@@ -2,7 +2,10 @@ package org.apache.spark.sql.graftx
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** SparkSessionExtensions entry point: makes the native graft expressions
   * addressable from SQL (`SELECT cosine_similarity(a.e, b.e) ...`).
@@ -15,10 +18,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => RangeJoinRewrite)
-    ext.injectOptimizerRule(_ => GlobalWindowRewrite)
-    ext.injectOptimizerRule(_ => SummaryRewrite)
-    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    GraftExtensions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
+    GraftExtensions.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
   }
 }
 
@@ -26,50 +27,38 @@ object GraftExtensions {
   type FunctionDescription =
     (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
+  /** A two-argument expression registered under its `prettyName`. */
+  private def binary(build: (Expression, Expression) => Expression): FunctionDescription = {
+    val proto = build(Literal(null), Literal(null))
+    (new FunctionIdentifier(proto.prettyName),
+      new ExpressionInfo(proto.getClass.getName, proto.prettyName),
+      (args: Seq[Expression]) => build(args(0), args(1)))
+  }
+
   val functions: Seq[FunctionDescription] = Seq(
-    (new FunctionIdentifier("cosine_similarity"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_similarity"),
-      (args: Seq[Expression]) => CosineSimilarity(args(0), args(1))),
-    (new FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, "sorted_intersect_count"),
-      (args: Seq[Expression]) => SortedIntersectCount(args(0), args(1))),
-    (new FunctionIdentifier("inner_product"),
-      new ExpressionInfo(classOf[InnerProduct].getName, "inner_product"),
-      (args: Seq[Expression]) => InnerProduct(args(0), args(1))),
-    (new FunctionIdentifier("squared_distance"),
-      new ExpressionInfo(classOf[SquaredDistance].getName, "squared_distance"),
-      (args: Seq[Expression]) => SquaredDistance(args(0), args(1))),
-    (new FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),
-      (args: Seq[Expression]) => JaroWinkler(args(0), args(1))))
+    binary(CosineSimilarity),
+    binary(SortedIntersectCount),
+    binary(InnerProduct),
+    binary(SquaredDistance),
+    binary(JaroWinkler))
+
+  // each rule is gated off unless its conf is set
+  private val rules: Seq[Rule[LogicalPlan]] =
+    Seq(RangeJoinRewrite, GlobalWindowRewrite, SummaryRewrite)
+  private val strategies: Seq[SparkStrategy] = Seq(AsOfJoinStrategy)
 
   /** Register on an already-built session (idempotent). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    functions.foreach { case (ident, info, builder) =>
-      registry.registerFunction(ident, info, builder)
-    }
-    // sessions built without withExtensions get the optimizer rule via the
-    // user-provided-optimizers batch (idempotent: gated off unless the
-    // bucket-width conf is set, and it never fires twice on one join)
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!classic.experimental.extraOptimizations.contains(RangeJoinRewrite)) {
-      classic.experimental.extraOptimizations =
-        classic.experimental.extraOptimizations :+ RangeJoinRewrite
+    functions.foreach { case (ident, info, builder) =>
+      classic.sessionState.functionRegistry.registerFunction(ident, info, builder)
     }
-    if (!classic.experimental.extraOptimizations.contains(GlobalWindowRewrite)) {
-      classic.experimental.extraOptimizations =
-        classic.experimental.extraOptimizations :+ GlobalWindowRewrite
-    }
-    if (!classic.experimental.extraOptimizations.contains(SummaryRewrite)) {
-      classic.experimental.extraOptimizations =
-        classic.experimental.extraOptimizations :+ SummaryRewrite
-    }
-    // the physical as-of join strategy, same late-registration path
-    if (!classic.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      classic.experimental.extraStrategies =
-        classic.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
+    // sessions built without withExtensions get the rules and strategies
+    // through the user-provided-optimizers/strategies batches
+    val experimental = classic.experimental
+    experimental.extraOptimizations ++=
+      rules.filterNot(experimental.extraOptimizations.contains)
+    experimental.extraStrategies ++=
+      strategies.filterNot(experimental.extraStrategies.contains)
   }
 }

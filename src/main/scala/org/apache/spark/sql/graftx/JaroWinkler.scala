@@ -3,7 +3,6 @@ package org.apache.spark.sql.graftx
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -95,6 +94,5 @@ case class JaroWinkler(left: Expression, right: Expression)
 
 object JaroWinklerFn {
   def jaroWinkler(a: Column, b: Column): Column =
-    ExpressionUtils.column(JaroWinkler(
-      ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+    ColumnBridge.binary(JaroWinkler)(a, b)
 }

@@ -1,10 +1,8 @@
 package org.apache.spark.sql.graftx
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongType}
 
 /** Native Catalyst expression: |A ∩ B| for two ascending-sorted
@@ -62,10 +60,4 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedIntersectCount =
     copy(left = newLeft, right = newRight)
-}
-
-object SortedIntersectCountFn {
-  def sortedIntersectCount(a: Column, b: Column): Column =
-    ExpressionUtils.column(SortedIntersectCount(
-      ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
 }

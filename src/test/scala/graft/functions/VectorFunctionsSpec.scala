@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
-/** The native CosineSimilarity expression must be bit-identical to the
-  * higher-order-function baseline (same double accumulation order), in both
+/** The native vector kernels must be bit-identical to their
+  * higher-order-function baselines (same double accumulation order), in both
   * interpreted and whole-stage-codegen paths. */
 class VectorFunctionsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -94,6 +94,69 @@ class VectorFunctionsSpec extends AnyFunSuite {
     assert(got(1L).isEmpty, "dimension mismatch must be NULL")
     assert(got(2L).isEmpty, "null element must be NULL")
     assert(got(3L).contains(11.0))
+  }
+
+  test("shared kernel contract: each kernel == its higher-order baseline, bit-exact, codegen and interpreted") {
+    import org.apache.spark.sql.{Column, Row}
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.types.{ArrayType, FloatType, StringType, StructField, StructType}
+    def sqDist(a: Column, b: Column): Column = aggregate(
+      zip_with(a, b, (x, y) =>
+        (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))),
+      lit(0.0), (acc, v) => acc + v)
+    val kernels: Seq[(String, (Column, Column) => Column, (Column, Column) => Column)] = Seq(
+      ("cosine_similarity", VectorFunctions.cosineFast, VectorOps.cosine),
+      ("inner_product", VectorFunctions.innerProductFast, VectorOps.dot),
+      ("squared_distance", VectorFunctions.squaredDistanceFast, sqDist))
+    val rows: Seq[(String, Seq[java.lang.Float], Seq[java.lang.Float])] = Seq(
+      ("ordinary", Seq(1.5f, -2.0f, 0.25f), Seq(0.5f, 4.0f, -1.0f)),
+      ("dimension mismatch", Seq(1.0f, 2.0f), Seq(1.0f, 2.0f, 3.0f)),
+      ("NULL element", Seq(1.0f, null), Seq(1.0f, 2.0f)),
+      ("zero norm", Seq(0.0f, 0.0f), Seq(1.0f, 2.0f)),
+      ("empty", Seq(), Seq()))
+    val modes = Seq(
+      "codegen" -> Seq("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+      "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    // results keyed by row name; None = NULL, else the double's bits
+    def results(q: org.apache.spark.sql.DataFrame) =
+      q.collect().map(r => r.getString(0) ->
+          (if (r.isNullAt(1)) None else Some(java.lang.Double.doubleToLongBits(r.getDouble(1)))))
+        .toMap
+    def withConfs[T](confs: Seq[(String, String)])(body: => T): T = {
+      val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    for ((mode, confs) <- modes; containsNull <- Seq(false, true)) withConfs(confs) {
+      val schema = StructType(Seq(StructField("name", StringType),
+        StructField("a", ArrayType(FloatType, containsNull)),
+        StructField("b", ArrayType(FloatType, containsNull))))
+      // an RDD source keeps the projection out of local-relation folding,
+      // so the kernel runs in the mode under test
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(
+        rows.filter { case (_, a, b) => containsNull || !(a ++ b).contains(null) }
+          .map { case (n, a, b) => Row(n, a, b) }, 1), schema)
+      for ((name, fast, base) <- kernels) {
+        val what = s"$name, $mode, containsNull=$containsNull"
+        val native = df.select($"name", fast($"a", $"b"))
+        assert(native.queryExecution.executedPlan
+          .find(_.isInstanceOf[WholeStageCodegenExec]).isDefined == (mode == "codegen"), what)
+        val got = results(native)
+        assert(got.size == (if (containsNull) 5 else 4), what)
+        // the cosine baseline divides by a zero norm: NULL under non-ANSI
+        // division (the kernel's contract), DIVIDE_BY_ZERO under ANSI
+        val want = withConfs(Seq("spark.sql.ansi.enabled" -> "false")) {
+          results(df.select($"name", base($"a", $"b")))
+        }
+        assert(got == want, what)
+        assert(got("dimension mismatch").isEmpty, what)
+      }
+    }
   }
 
   test("MIPS augmentation preserves inner-product order under cosine") {

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.nio.file.Files
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -94,6 +95,39 @@ class StageZoneSpec extends AnyFunSuite {
     assert(spark.sql("SELECT deviceid FROM stage_cat WHERE year = '2020'")
       .as[Int].collect().toSeq == Seq(4))
     spark.sql("DROP TABLE stage_cat")
+  }
+
+  test("catalog registration honours the stage manifest: hidden leaves are not registered") {
+    val root = Files.createTempDirectory("graft-catalog-manifest").toString
+    val paths = StreamingIngest.Paths(root)
+    Seq(0, 1).foreach { i =>
+      StreamingIngest.writeBatch(
+        Seq(sohEnvelope(i, 1678759166L)).toDF("recordId", "data"),
+        GeoDim.empty(spark), paths, i.toLong)
+    }
+    def sqlCount = spark.sql("SELECT count(*) FROM stage_mf").head().getLong(0)
+    // a compacted leaf that landed but was never committed stays hidden
+    val dayDir = new Path(s"${paths.stage}/year=2023/month=03/day=14")
+    val fs = dayDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    FileUtil.copy(fs, new Path(dayDir, "batch_id=0"), fs,
+      new Path(dayDir, "batch_id=compacted-1"), false,
+      spark.sparkContext.hadoopConfiguration)
+    val reg = StageCatalog.register(spark, paths, table = "stage_mf")
+    assert(reg.partitions.map(_.split('/').last) == Seq("batch_id=0", "batch_id=1"))
+    assert(sqlCount == StreamingIngest.stageTable(spark, paths).count())
+
+    // a committed compaction whose deletes are pending retires the originals
+    StageCompactor.compactPartition(spark, paths, "2023", "03", "14",
+      lazyDeletes = true)
+    val added = StageCatalog.recoverPartitions(spark, "stage_mf")
+    val visible = StreamingIngest.stageTable(spark, paths).count()
+    assert(visible == 2)
+    assert(sqlCount == visible,
+      s"catalog must read what stageTable reads: ${StageCatalog.listPartitions(spark, "stage_mf")}")
+    assert(added.size == 1 && added.head.contains("batch_id=compacted-"), s"$added")
+    // the table is EXTERNAL: dropping the hidden partitions kept their files
+    assert(fs.exists(new Path(dayDir, "batch_id=0")))
+    spark.sql("DROP TABLE stage_mf")
   }
 
   test("schema drift against the declared stage contract is detected, LOG-only (S12)") {
