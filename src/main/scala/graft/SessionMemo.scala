@@ -4,11 +4,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** The one session-lifetime memo of deterministic sub-results: the pair
-  * mine (DedupQueries.ngramPairs), the KMeans and product-quantizer fits
-  * and the bigram LM counts (TextModels.bigramCounts). Each holds bounded
-  * DRIVER values (centroids, codebooks, count tuples, mined pair rows),
-  * never a persisted frame: Bench and Verify unpersist every persistent
-  * RDD between queries, which would sever a memoized checkpoint's lineage.
+  * mine (DedupQueries.ngramPairs), the one k-means fit
+  * (KMeans.fitSubspaces: IVF lists, SemDeDup, product-quantizer codebooks,
+  * the inverted multi-index) and the bigram LM counts
+  * (TextModels.bigramCounts). Each holds bounded DRIVER values (centroids,
+  * codebooks, count tuples, mined pair rows), never a persisted frame:
+  * Bench and Verify unpersist every persistent RDD between queries, which
+  * would sever a memoized checkpoint's lineage.
   *
   * Key rule: the caller's tag and parameters, the input's canonical
   * OPTIMIZED plan, and per file leaf its root paths plus a hash of every

@@ -23,8 +23,12 @@ object VectorOps {
   /** ‖a‖₂ in double. */
   def l2norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine similarity in double. */
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
+  /** Cosine similarity in double; NULL when either norm is zero (the
+    * native kernel's rule — a division would raise under ANSI). */
+  def cosine(a: Column, b: Column): Column = {
+    val (na, nb) = (l2norm(a), l2norm(b))
+    when(na =!= 0.0 && nb =!= 0.0, dot(a, b) / (na * nb))
+  }
 
   /** Deterministic pseudo-random hyperplanes for sign-LSH (seeded; the same
     * planes on every executor — shipped as literals, no RNG at runtime). */

@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 
@@ -22,130 +22,37 @@ import graft.functions.VectorFunctions
   */
 object ProductQuantizer {
 
-  /** codebooks(j)(c) = centroid c of subspace j (each of length subDim). */
-  final case class Model(m: Int, subDim: Int, codebooks: Seq[Seq[Array[Float]]])
-
-  /** (sub INT, code INT, cent ARRAY<FLOAT>) frame from the driver model —
-    * m×k rows, always broadcast. */
-  def codebooksDF(spark: SparkSession, model: Model): DataFrame = {
-    import spark.implicits._
-    (for {
-      (cb, j) <- model.codebooks.zipWithIndex
-      (c, code) <- cb.zipWithIndex
-    } yield (j, code, c.toSeq)).toDF("sub", "code", "cent")
-      .select(col("sub"), col("code"), col("cent").cast("array<float>").as("cent"))
-  }
-
-  /** One row per (vector, subspace): (idCol, sub, sv ARRAY<FLOAT>). */
-  private def subVectors(vecs: DataFrame, idCol: String, vecCol: String,
-      m: Int, subDim: Int): DataFrame =
-    vecs.select(col(idCol), posexplode(array(
-      (0 until m).map(j => slice(col(vecCol), j * subDim + 1, subDim)): _*
-    )).as(Seq("sub", "sv")))
-
-  /** Learn the m codebooks with ONE batched Euclidean Lloyd loop over the
-    * exploded (id, sub, sv) frame — all subspaces train simultaneously,
-    * keyed by `sub`, so each iteration is a single assignment+update job
-    * (m-way serial KMeans runs cost m job chains of pure scheduling
-    * overhead for the same arithmetic; measured 7 s → ~2 s at sf0.1).
-    * Per-subspace semantics match [[KMeans.fit]]: seed = the k
-    * lowest-(xxhash64, id) sub-vectors, assignment ties to the lowest
-    * code, empty codes keep their previous centroid. Memoized per (input,
-    * params) through [[graft.SessionMemo]]. */
+  /** Learn the m codebooks: [[KMeans.fitSubspaces]] over the (id, sub, sv)
+    * frame with the L2 score, all m subspaces trained by the same jobs (m
+    * serial fits would cost m job chains for the same arithmetic). */
   def fit(vecs: DataFrame, idCol: String, vecCol: String, dim: Int,
-      m: Int = 4, k: Int = 16, iters: Int = 3): Model =
-    graft.SessionMemo("ProductQuantizer.fit", vecs, idCol, vecCol, dim, m, k, iters)(
-      fitUncached(vecs, idCol, vecCol, dim, m, k, iters))
-
-  private def fitUncached(vecs: DataFrame, idCol: String, vecCol: String,
-      dim: Int, m: Int, k: Int, iters: Int): Model = {
+      m: Int = 4, k: Int = 16, iters: Int = 3): KMeans.Model = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
-    val subDim = dim / m
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val subs = subVectors(vecs, idCol, vecCol, m, subDim)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // deterministic per-subspace seeding (the KMeans rule: the k lowest
-      // (hash, id) sub-vectors). Two-phase rank — bucket-local row_number
-      // at full parallelism, then a final rank over only m×buckets×k
-      // survivors — because a single window partitioned by `sub` would
-      // sort the whole exploded corpus across m partitions (the
-      // corpus-bounded low-parallelism sort PlanSpec pins against).
-      val h = xxhash64(col("sv"))
-      val nBuckets = 64
-      val localW = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("sub"), pmod(h, lit(nBuckets))).orderBy(h, col(idCol))
-      val finalW = org.apache.spark.sql.expressions.Window
-        .partitionBy("sub").orderBy(col("h"), col(idCol))
-      var cents: Map[(Int, Int), Array[Float]] = subs
-        .withColumn("rn", row_number().over(localW)).filter(col("rn") <= k)
-        .withColumn("h", h)
-        .withColumn("rn2", row_number().over(finalW)).filter(col("rn2") <= k)
-        .select(col("sub"), (col("rn2") - 1).cast("int").as("code"), col("sv"))
-        .as[(Int, Int, Array[Float])].collect()
-        .map { case (s, c, v) => (s, c) -> v }.toMap
-      require(cents.nonEmpty, "PQ fit on an empty corpus")
-      // corpora smaller than k seed fewer codes — train/return what exists
-      // (the per-subspace KMeans path tolerated short seeds the same way)
-      val kEff = cents.keys.count(_._1 == 0)
-      var it = 0
-      while (it < iters) {
-        val cb = codebooksDF(spark,
-          Model(m, subDim, (0 until m).map(j => (0 until kEff).map(c => cents((j, c))))))
-        // argmin code per (vector, subspace) — sv rides the argmax struct
-        // (codes are unique within the group, so it is never compared) —
-        // then per-(sub, code, dim) mean: ≤ m·k·subDim rows to the driver
-        val newCents = subs.join(broadcast(cb), "sub")
-          .select(col(idCol), col("sub"), col("code"), col("sv"),
-            (-VectorFunctions.squaredDistanceFast(col("sv"), col("cent"))).as("ns"))
-          .groupBy(col(idCol), col("sub"))
-          .agg(max(struct(col("ns"), (-col("code")).as("nc"), col("sv").as("v"))).as("b"))
-          .select(col("sub"), (-col("b.nc")).cast("int").as("code"),
-            posexplode(col("b.v")).as(Seq("pos", "v")))
-          .groupBy("sub", "code", "pos").agg(avg("v").as("mv"))
-          .as[(Int, Int, Int, Double)].collect()
-        val grouped = newCents.groupBy(r => (r._1, r._2))
-        cents = cents.map { case (key, old) =>
-          key -> grouped.get(key).map { rows =>
-            val arr = new Array[Float](subDim)
-            rows.foreach(r => arr(r._3) = r._4.toFloat)
-            arr
-          }.getOrElse(old)
-        }
-        it += 1
-      }
-      Model(m, subDim, (0 until m).map(j => (0 until kEff).map(c => cents((j, c)))))
-    } finally subs.unpersist(blocking = false)
+    val model = KMeans.fitSubspaces(KMeans.subVectors(vecs, idCol, vecCol, m, dim / m),
+      idCol, m, k, iters, KMeans.NegL2)
+    require(model.codebooks.head.nonEmpty, "PQ fit on an empty corpus")
+    model
   }
 
   /** Encode the corpus: (idCol, codes ARRAY<INT>) with codes(j) the L2-
     * nearest code of subspace j (lowest-code tie-break). One pass: explode
-    * to (id, sub, sv), broadcast-join the m×k codebook, argmin per (id,
-    * sub) as a partial+final aggregate, re-assemble the code array. */
+    * to (id, sub, sv), the per-subspace argmax against the broadcast m×k
+    * codebook, re-assemble the code array. */
   def encode(vecs: DataFrame, idCol: String, vecCol: String,
-      model: Model): DataFrame = {
-    val cb = codebooksDF(vecs.sparkSession, model)
-    subVectors(vecs, idCol, vecCol, model.m, model.subDim)
-      .join(broadcast(cb), "sub")
-      .select(col(idCol), col("sub"), col("code"),
-        VectorFunctions.squaredDistanceFast(col("sv"), col("cent")).as("dsq"))
-      .groupBy(col(idCol), col("sub"))
-      .agg(max(struct((-col("dsq")).as("ndsq"), (-col("code")).as("ncode"))).as("b"))
-      .select(col(idCol), col("sub"), (-col("b.ncode")).cast("int").as("code"))
+      model: KMeans.Model): DataFrame =
+    KMeans.assignSubspaces(KMeans.subVectors(vecs, idCol, vecCol, model.m, model.subDim),
+        idCol, model.codebooks, KMeans.NegL2)
       .groupBy(idCol)
       .agg(transform(
         array_sort(collect_list(struct(col("sub"), col("code")))),
         s => s.getField("code")).as("codes"))
-  }
 
   /** Per-query ADC tables: (qid, tabs ARRAY<ARRAY<DOUBLE>>), tabs(j)(c) =
     * ‖q_sub_j − centroid_c‖² — exact sub-distances, m×k doubles per query. */
   def adcTables(queries: DataFrame, idCol: String, vecCol: String,
-      model: Model): DataFrame = {
-    val cb = codebooksDF(queries.sparkSession, model)
-    subVectors(queries, idCol, vecCol, model.m, model.subDim)
+      model: KMeans.Model): DataFrame = {
+    val cb = KMeans.codebooksDF(queries.sparkSession, model.codebooks)
+    KMeans.subVectors(queries, idCol, vecCol, model.m, model.subDim)
       .join(broadcast(cb), "sub")
       .select(col(idCol).as("qid"), col("sub"), col("code"),
         VectorFunctions.squaredDistanceFast(col("sv"), col("cent")).as("dsq"))

@@ -1112,34 +1112,36 @@ object SimilarityQueries {
 
   /** Inverted multi-index (Babenko & Lempitsky 2012) approximate top-k:
     * the vector splits into two halves, each half gets its OWN small
-    * codebook (k-means over sub-vectors, memoized KMeans.fit), and a cell is
+    * codebook (one memoized two-subspace cosine k-means fit), and a cell is
     * the PAIR of half-assignments — kPerHalf² cells from 2·kPerHalf
     * centroids. That product structure is the trillion-vector trick: 2×8
     * centroids index as finely as a flat IVF with 64 lists at 1/4 the
     * model size and assignment cost, and cell population is far more
     * uniform than flat-IVF lists. Queries probe the nProbe nearest
     * centroids PER HALF (nProbe² cells — bounded, corpus-independent
-    * fan-out); candidates rerank by exact cosine. Corpus-side work: two
-    * broadcast argmax passes (assignment) + one equi-join on the cell key;
-    * nothing corpus-sized shuffles more than once. */
+    * fan-out); candidates rerank by exact cosine. Corpus-side work: one
+    * broadcast argmax pass over both halves (assignment) + one equi-join on
+    * the cell key. */
   def imiTopK(e: DataFrame, queryIds: Seq[Long], k: Int,
       kPerHalf: Int = 8, nProbe: Int = 3, iters: Int = 3): DataFrame = {
     import graft.ml.KMeans
     val spark = e.sparkSession
-    val h = e.select(col("vec_id"), col("embedding"),
-      expr("slice(embedding, 1, 32)").as("h1"),
-      expr("slice(embedding, 33, 32)").as("h2"))
-    val c1 = KMeans.centroidsDF(spark, KMeans.fit(h, "vec_id", "h1", kPerHalf, iters))
-    val c2 = KMeans.centroidsDF(spark, KMeans.fit(h, "vec_id", "h2", kPerHalf, iters))
-    // cell assignment: one broadcast argmax pass per half, equi-joined on
-    // vec_id (each pass is agg-reduced before the join — no corpus fanout)
-    val a1 = KMeans.assign(h, "vec_id", "h1", c1)
-      .select(col("vec_id"), col("cid").as("c1"))
-    val a2 = KMeans.assign(h, "vec_id", "h2", c2)
-      .select(col("vec_id"), col("cid").as("c2"))
-    val lists = e.join(a1, "vec_id").join(a2, "vec_id")
+    val halves = KMeans.subVectors(e, "vec_id", "embedding", 2, 32)
+    val books = KMeans.fitSubspaces(halves, "vec_id", 2, kPerHalf, iters, KMeans.Cosine)
+      .codebooks
+    val c1 = KMeans.centroidsDF(spark, books(0))
+    val c2 = KMeans.centroidsDF(spark, books(1))
+    // cell assignment: one argmax pass over both halves, pivoted to the
+    // (c1, c2) cell per vector
+    val assigned = KMeans.assignSubspaces(halves, "vec_id", books, KMeans.Cosine)
+      .groupBy("vec_id")
+      .agg(max(when(col("sub") === 0, col("code"))).as("c1"),
+        max(when(col("sub") === 1, col("code"))).as("c2"))
+    val lists = e.join(assigned, "vec_id")
       .select(col("vec_id"), col("c1"), col("c2"), col("embedding"))
-    val q = h.filter(col("vec_id").isin(queryIds: _*))
+    val q = e.filter(col("vec_id").isin(queryIds: _*))
+      .select(col("vec_id"), col("embedding"),
+        slice(col("embedding"), 1, 32).as("h1"), slice(col("embedding"), 33, 32).as("h2"))
     val p1 = KMeans.probes(q, "vec_id", "h1", c1, nProbe)
       .select(col("vec_id").as("qid"), col("cid").as("c1"))
     val p2 = KMeans.probes(q, "vec_id", "h2", c2, nProbe)

@@ -586,7 +586,7 @@ object StatsQueries {
         .as[(Long, Long)].groupByKey(_._1).mapValues(_._2)
         .agg(skAgg)
         .toDF("day", "sk")
-      val dir = s"/tmp/graft_sketch_q218_${new java.io.File(d).getName}"
+      val dir = s"/tmp/${corpusTag(d, "sketch_q218")}"
       daily.write.mode("overwrite").parquet(dir) // job 1: persist sketches
       val mergeAgg = new graft.functions.HllMergeAggregator().toColumn.name("est")
       val est = s.read.parquet(dir) // job 2: raw events never re-read
@@ -909,7 +909,7 @@ object StatsQueries {
         .agg(skAgg)
         .toDF("key", "sk")
         .select(col("key._1").as("event_type"), col("sk"))
-      val dir = s"/tmp/graft_kll_q242_${new java.io.File(d).getName}"
+      val dir = s"/tmp/${corpusTag(d, "kll_q242")}"
       daily.write.mode("overwrite").parquet(dir) // job 1: persist sketches
       val qAgg = new graft.functions.KllQuantileAggregator(256,
         Seq(0.5, 0.9, 0.99)).toColumn.name("qs")

@@ -189,10 +189,8 @@ package object queries {
   def cachedFixture(sfDir: String, name: String, version: Long,
       sourceTable: String = "events", params: Seq[Any] = Nil)
       (build: String => Unit): String = {
-    val sf = new java.io.File(sfDir).getCanonicalFile
-    val prefix = s"graft_${name}_${sf.getName}_" +
-      s"${java.lang.Long.toHexString(fnv(sf.getPath.getBytes("UTF-8")))}_"
-    val src = new java.io.File(sf, s"$sourceTable.parquet")
+    val prefix = corpusTag(sfDir, name) + "_"
+    val src = new java.io.File(sfDir, s"$sourceTable.parquet")
     val head = s"$version|${params.mkString(",")}".getBytes("UTF-8")
     val key = java.lang.Long.toHexString(
       dataFiles(src).foldLeft(fnv(head))((h, f) => fnv(fileStamp(f), h)))
@@ -216,6 +214,15 @@ package object queries {
       }
     }
     dir.getPath
+  }
+
+  /** `graft_<name>_<sf basename>_<canonical-path hash>`: the /tmp name of
+    * what `name` derives from one sf dir — two same-named corpora in
+    * different places never share it. */
+  def corpusTag(sfDir: String, name: String): String = {
+    val sf = new java.io.File(sfDir).getCanonicalFile
+    s"graft_${name}_${sf.getName}_" +
+      java.lang.Long.toHexString(fnv(sf.getPath.getBytes("UTF-8")))
   }
 
   private val FixtureRoot = new java.io.File("/tmp")

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ml.{KMeans, ProductQuantizer}
 import graft.queries.{DedupQueries, TextModels}
 
-/** Pins the session-memo key rule for every memo user (KMeans.fit,
-  * ProductQuantizer.fit, TextModels.bigramCounts, DedupQueries.ngramPairs):
+/** Pins the session-memo key rule for every memo user (the k-means fit
+  * behind KMeans.fit, ProductQuantizer.fit and the IMI halves,
+  * TextModels.bigramCounts, DedupQueries.ngramPairs):
   * a result memoized for one input is never served for another. The
   * inputs are chosen so that their canonical plans print the same string:
   * two corpora of the same schema read from different paths, one path
@@ -35,6 +36,9 @@ class SessionMemoSpec extends AnyFunSuite {
     User("ProductQuantizer.fit", "embeddings",
       e => ProductQuantizer.fit(e, "vec_id", "embedding", dim = 64, m = 4,
         k = 4, iters = 2).codebooks.flatten.map(_.toSeq)),
+    User("KMeans.fitSubspaces (IMI halves)", "embeddings",
+      e => KMeans.fitSubspaces(KMeans.subVectors(e, "vec_id", "embedding", 2, 32),
+        "vec_id", 2, 4, 2, KMeans.Cosine).codebooks.flatten.map(_.toSeq)),
     User("TextModels.bigramCounts", "documents",
       d => rows(TextModels.bigramCounts(d))),
     User("DedupQueries.ngramPairs", "documents",

@@ -148,11 +148,7 @@ class VectorFunctionsSpec extends AnyFunSuite {
           .find(_.isInstanceOf[WholeStageCodegenExec]).isDefined == (mode == "codegen"), what)
         val got = results(native)
         assert(got.size == (if (containsNull) 5 else 4), what)
-        // the cosine baseline divides by a zero norm: NULL under non-ANSI
-        // division (the kernel's contract), DIVIDE_BY_ZERO under ANSI
-        val want = withConfs(Seq("spark.sql.ansi.enabled" -> "false")) {
-          results(df.select($"name", base($"a", $"b")))
-        }
+        val want = results(df.select($"name", base($"a", $"b")))
         assert(got == want, what)
         assert(got("dimension mismatch").isEmpty, what)
       }

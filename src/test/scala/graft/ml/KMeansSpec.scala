@@ -35,6 +35,25 @@ object ClusteredCorpus {
   }
 }
 
+/** Bit digest of fitted codebooks, books(sub)(code): SHA-256 over each
+  * codebook's size and every float's raw bits, in order (first 8 bytes).
+  * The fits are bit-stable from run to run, so a pinned digest moves only
+  * when seeding, assignment or the update's arithmetic changes. */
+object ModelBits {
+  def apply(books: Seq[Seq[Array[Float]]]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    books.foreach { b =>
+      md.update(BigInt(b.size).toByteArray)
+      b.foreach { c =>
+        val bb = java.nio.ByteBuffer.allocate(4 * c.length)
+        c.foreach(f => bb.putInt(java.lang.Float.floatToRawIntBits(f)))
+        md.update(bb.array())
+      }
+    }
+    md.digest().take(8).map("%02x".format(_)).mkString
+  }
+}
+
 class KMeansSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -67,5 +86,14 @@ class KMeansSpec extends AnyFunSuite {
       .collect()(0).getDouble(0)
     info(s"mean assignment cosine = $meanSim")
     assert(meanSim >= 0.8, s"mean assignment cosine $meanSim")
+  }
+
+  test("k-means and the IMI half codebooks fit bit-identical models on the smoke corpus") {
+    val e = graft.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    assert(ModelBits(Seq(KMeans.fit(e, "vec_id", "embedding", k = 16, iters = 3)))
+      == "3612a5b964caaae8")
+    val halves = KMeans.subVectors(e, "vec_id", "embedding", m = 2, subDim = 32)
+    assert(ModelBits(KMeans.fitSubspaces(halves, "vec_id", m = 2, k = 8, iters = 3,
+      KMeans.Cosine).codebooks) == "07f6abdf04cd5fa1")
   }
 }

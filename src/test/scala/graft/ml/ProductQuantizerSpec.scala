@@ -82,6 +82,13 @@ class ProductQuantizerSpec extends AnyFunSuite {
     assert(codes.count() == 6)
   }
 
+  test("PQ fits a bit-identical model on the smoke corpus") {
+    val e = graft.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val model = ProductQuantizer.fit(e, "vec_id", "embedding", dim = 64, m = 4,
+      k = 16, iters = 3)
+    assert(ModelBits(model.codebooks) == "ef84eb44c3ab4608")
+  }
+
   test("squared-distance kernel: NULL on dim mismatch, matches double math") {
     import spark.implicits._
     val df = Seq(

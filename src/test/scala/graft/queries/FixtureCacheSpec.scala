@@ -16,11 +16,12 @@ import graft.{SparkEntry, SparkTestSession, Tables}
 
 /** Pins the on-disk fixture cache ([[cachedFixture]]): its key sees a
   * source rewritten with its mtime kept and tells two same-named corpora
-  * apart, one key builds once under concurrent callers, a failed build
-  * publishes nothing, and params split the key. Cases over queries run
-  * only through query entry points, on copies of the smoke corpus under a
-  * temp directory. A source lint keeps the cache the only place that
-  * stamps files or retires /tmp entries. */
+  * apart (as do the sketch directories of q218 and q242), one key builds
+  * once under concurrent callers, a failed build publishes nothing, and
+  * params split the key. Cases over queries run only through query entry
+  * points, on copies of the smoke corpus under a temp directory. A source
+  * lint keeps the cache the only place that stamps files or retires /tmp
+  * entries. */
 class FixtureCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = graft.Graft.ensureConfigured(SparkTestSession.spark)
   private val small = "/root/testdata/sf0.001"
@@ -112,6 +113,15 @@ class FixtureCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
       .agg(count(lit(1)).as("n"), round(sum("value"), 6).as("sum_value"),
         sum("n_total").as("weight"))
     assert(rows(run("q267_bucketed_join", b)) === rows(plain))
+  }
+
+  test("sketch queries over same-named corpora keep separate sketch dirs (q218, q242)") {
+    val (a, b) = (corpus("a"), corpus("b", bigEvents = true))
+    Seq("q218_sketch_rollup", "q242_kll_quantiles").foreach { q =>
+      val fromA = run(q, a)
+      run(q, b)
+      assert(rows(fromA) === rows(run(q, a)), s"$q: B's call replaced A's sketches")
+    }
   }
 
   test("concurrent callers of one key build once") {
