@@ -150,12 +150,12 @@ object IngestParity {
     },
 
     // Router parity again (same oracle as q35), but through a REAL
-    // filesystem round-trip and the custom DataSource V2 reader
+    // filesystem round-trip and the envelope file reader
     // (graft.sources.EnvelopeDataSource): the envelope corpus is written as
-    // line files, read back via format("graft-envelope") — partition-per-
-    // file planning, source-side filter/column pushdown — and classified by
-    // the same pipeline. Proves the source's bytes-in-bytes-out fidelity
-    // end-to-end against an oracle that never saw the files.
+    // line files, read back via format("graft-envelope") — the same reader
+    // the push spool stream uses — and classified by the same pipeline.
+    // Proves the source's bytes-in-bytes-out fidelity end-to-end against an
+    // oracle that never saw the files.
     QueryDef.sql(
       "q118_envelope_source",
       """SELECT CASE WHEN event_type = 'purchase' THEN 'sensor'

@@ -968,6 +968,7 @@ object MultimodalQueries {
         s"${runRoot.getPath}/out", s"${runRoot.getPath}/ckpt")
       graft.streaming.StreamingMultimodal
         .readSink(s, s"${runRoot.getPath}/out")
+        .localCheckpoint() // the next call's rmTree removes the sink
         .select(col("media_id"), col("width"), col("height"),
           col("sum_r"), col("sum_g"), col("sum_b"),
           col("b0"), col("b1"), col("b2"), col("b3"))
@@ -1065,6 +1066,7 @@ object MultimodalQueries {
         s"${runRoot.getPath}/out", s"${runRoot.getPath}/ckpt")
       graft.streaming.StreamingMultimodal
         .readSink(s, s"${runRoot.getPath}/out")
+        .localCheckpoint() // the next call's rmTree removes the sink
         .select(col("media_id"), col("sample_rate"), col("n_samples"),
           col("sum_amp"), col("sum_sq"))
         .orderBy("media_id")
@@ -1107,6 +1109,7 @@ object MultimodalQueries {
         s"${runRoot.getPath}/out", s"${runRoot.getPath}/ckpt")
       graft.streaming.StreamingMultimodal
         .readSink(s, s"${runRoot.getPath}/out")
+        .localCheckpoint() // the next call's rmTree removes the sink
         .select(col("media_id"), col("width"), col("height"),
           col("n_frames"), col("n_sampled"),
           col("sum_r"), col("sum_g"), col("sum_b"))

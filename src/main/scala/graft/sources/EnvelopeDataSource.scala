@@ -1,52 +1,87 @@
 package graft.sources
 
-import java.util
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.mapreduce.Job
+import org.apache.spark.sql.{SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources._
+import org.apache.spark.sql.execution.datasources.{OutputWriterFactory, PartitionedFile, TextBasedFileFormat}
+import org.apache.spark.sql.execution.datasources.text.TextFileFormat
+import org.apache.spark.sql.execution.streaming.Source
+import org.apache.spark.sql.execution.streaming.runtime.FileStreamSource
+import org.apache.spark.sql.sources.{DataSourceRegister, Filter, StreamSourceProvider}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSource V2 reader for envelope drop zones: line files whose every line
-  * is one base64 envelope body (the wire format API Gateway's VTL template
-  * emits in the reference — stack.py:273-316). `spark.read
-  * .format("graft-envelope").load(dir)` yields
-  * `(file, line_no, recordId, data)` with `recordId = <basename>:<line_no>`
-  * — positionally unique and replay-stable, which the plain `text` +
-  * [[graft.streaming.EnvelopeSources.fromTextLines]] adapter cannot promise
-  * for byte-identical duplicate lines.
+/** The one reader for envelope drop zones: line files whose every line is
+  * one base64 envelope body (the wire format API Gateway's VTL template
+  * emits in the reference — stack.py:273-316). `format("graft-envelope")
+  * .load(dir)` yields `(file, line_no, recordId, data)` with
+  * `recordId = <basename>:<line_no>`: a position, so byte-identical lines
+  * in one file keep distinct ids, and a replay rebuilds the same ids.
   *
-  * Built as a real Spark source, not a wrapper: the Catalyst integration
-  * does the work a 100 TB scan needs —
-  *   - **partition planning**: one input partition per file, listed once on
-  *     the driver; executors each open only their own file;
-  *   - **file pruning**: pushed filters on `file` eliminate whole files at
-  *     PLANNING time (the partition never exists, nothing is opened) —
-  *     the same class of win as Hive-partition pruning;
-  *   - **row-filter pushdown**: supported predicates on `data`/`recordId`/
-  *     `line_no` evaluate inside the reader loop, before rows reach Spark —
-  *     fully handled, so Spark plans no residual Filter for them;
-  *   - **column pruning**: the reader materializes only requested columns
-  *     (skipping even the recordId string-build when unused).
+  * A read-only Spark `FileFormat`; Spark supplies the rest:
+  *   - batch reads list the directory once (hidden `_`/`.` names skipped),
+  *     and a filter on `_metadata.file_name` or `_metadata.file_path`
+  *     prunes whole files at planning time;
+  *   - `readStream` is Spark's `FileStreamSource` (no `.schema` needed): a
+  *     batch-id offset, a seen-files log that still admits a late file with
+  *     an early name, exactly-once across a restart, and the
+  *     `maxBytesPerTrigger` admission cap.
+  * Files are never split (line numbers are positions in the whole file)
+  * and are opened with the session's Hadoop configuration. Only the
+  * required columns are filled; every filter stays with Spark.
   */
-class EnvelopeDataSource extends TableProvider with DataSourceRegister {
+class EnvelopeDataSource extends TextBasedFileFormat
+    with DataSourceRegister with StreamSourceProvider {
+  import EnvelopeDataSource.SCHEMA
+
   override def shortName(): String = "graft-envelope"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    EnvelopeDataSource.SCHEMA
+  override def inferSchema(spark: SparkSession, options: Map[String, String],
+      files: Seq[FileStatus]): Option[StructType] = Some(SCHEMA)
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new EnvelopeTable(properties.get("path"))
+  override def isSplitable(spark: SparkSession, options: Map[String, String],
+      path: Path): Boolean = false
+
+  override def prepareWrite(spark: SparkSession, job: Job,
+      options: Map[String, String], dataSchema: StructType): OutputWriterFactory =
+    throw new UnsupportedOperationException("graft-envelope is read-only")
+
+  override def buildReader(spark: SparkSession, dataSchema: StructType,
+      partitionSchema: StructType, requiredSchema: StructType,
+      filters: Seq[Filter], options: Map[String, String],
+      hadoopConf: Configuration): PartitionedFile => Iterator[InternalRow] = {
+    val value = StructType(Seq(StructField("value", StringType)))
+    val lines = new TextFileFormat().buildReader(spark, value,
+      StructType(Nil), value, Nil, options, hadoopConf)
+    val fields = requiredSchema.fieldNames.toSeq
+    (file: PartitionedFile) => {
+      val path = file.toPath
+      val name = UTF8String.fromString(path.toString)
+      var n = 0L
+      lines(file).map { row =>
+        n += 1
+        InternalRow.fromSeq(fields.map {
+          case "file" => name
+          case "line_no" => n
+          case "recordId" => UTF8String.fromString(s"${path.getName}:$n")
+          case "data" => row.getUTF8String(0).copy()
+        })
+      }
+    }
+  }
+
+  override def sourceSchema(sqlContext: SQLContext, schema: Option[StructType],
+      providerName: String, parameters: Map[String, String]): (String, StructType) =
+    (shortName(), SCHEMA)
+
+  override def createSource(sqlContext: SQLContext, metadataPath: String,
+      schema: Option[StructType], providerName: String,
+      parameters: Map[String, String]): Source =
+    new FileStreamSource(
+      sqlContext.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      parameters("path"), getClass.getName, SCHEMA, Nil, metadataPath, parameters)
 }
 
 object EnvelopeDataSource {
@@ -55,247 +90,4 @@ object EnvelopeDataSource {
     StructField("line_no", LongType, nullable = false),
     StructField("recordId", StringType, nullable = false),
     StructField("data", StringType, nullable = false)))
-
-  /** Can `f` be evaluated exactly by the source (file level or row level)?
-    * Anything else stays residual — Spark evaluates it after the scan. */
-  private[sources] def supported(f: Filter): Boolean = f match {
-    case EqualTo(a, _: String) => SCHEMA.fieldNames.contains(a)
-    case In(a, vs) => SCHEMA.fieldNames.contains(a) && vs.forall(_.isInstanceOf[String])
-    case StringStartsWith(a, _) => a != "line_no" && SCHEMA.fieldNames.contains(a)
-    case StringEndsWith(a, _) => a != "line_no" && SCHEMA.fieldNames.contains(a)
-    case StringContains(a, _) => a != "line_no" && SCHEMA.fieldNames.contains(a)
-    case EqualTo("line_no", _: Long) => true
-    case GreaterThan("line_no", _: Long) => true
-    case GreaterThanOrEqual("line_no", _: Long) => true
-    case LessThan("line_no", _: Long) => true
-    case LessThanOrEqual("line_no", _: Long) => true
-    case IsNotNull(a) => SCHEMA.fieldNames.contains(a) // columns are never null
-    case And(l, r) => supported(l) && supported(r)
-    case _ => false
-  }
-
-  /** Exact evaluation of a supported filter against one (virtual) row. */
-  private[sources] def eval(f: Filter, file: String, lineNo: Long,
-      recordId: => String, data: String): Boolean = {
-    def colVal(a: String): String = a match {
-      case "file" => file
-      case "recordId" => recordId
-      case "data" => data
-      case other => sys.error(s"unsupported column $other")
-    }
-    f match {
-      case EqualTo("line_no", v: Long) => lineNo == v
-      case GreaterThan("line_no", v: Long) => lineNo > v
-      case GreaterThanOrEqual("line_no", v: Long) => lineNo >= v
-      case LessThan("line_no", v: Long) => lineNo < v
-      case LessThanOrEqual("line_no", v: Long) => lineNo <= v
-      case EqualTo(a, v: String) => colVal(a) == v
-      case In(a, vs) => vs.contains(colVal(a))
-      case StringStartsWith(a, p) => colVal(a).startsWith(p)
-      case StringEndsWith(a, s) => colVal(a).endsWith(s)
-      case StringContains(a, s) => colVal(a).contains(s)
-      case IsNotNull(_) => true
-      case And(l, r) =>
-        eval(l, file, lineNo, recordId, data) && eval(r, file, lineNo, recordId, data)
-      case other => sys.error(s"unsupported filter $other")
-    }
-  }
-
-  /** True when `f` constrains ONLY the `file` column — then it prunes whole
-    * files during partition planning. */
-  private[sources] def fileOnly(f: Filter): Boolean =
-    f.references.toSet == Set("file")
-}
-
-class EnvelopeTable(path: String) extends Table with SupportsRead {
-  require(path != null, "graft-envelope requires a path (.load(dir))")
-  override def name(): String = s"graft-envelope($path)"
-  override def schema(): StructType = EnvelopeDataSource.SCHEMA
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new EnvelopeScanBuilder(path)
-}
-
-class EnvelopeScanBuilder(path: String) extends ScanBuilder
-    with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
-  private var required: StructType = EnvelopeDataSource.SCHEMA
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (sup, residual) = filters.partition(EnvelopeDataSource.supported)
-    pushed = sup
-    residual // fully handled ones don't come back to Spark
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def build(): Scan = new EnvelopeScan(path, required, pushed)
-}
-
-final case class EnvelopeInputPartition(file: String) extends InputPartition
-
-class EnvelopeScan(path: String, required: StructType,
-    filters: Array[Filter]) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-envelope path=$path, " +
-      s"ReadColumns: [${required.fieldNames.mkString(", ")}], " +
-      s"PushedFilters: [${filters.mkString(", ")}]"
-
-  /** Driver-side planning: list the directory once, drop every file a
-    * file-only pushed filter rejects, one partition per surviving file. */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
-    val files =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).toSeq.filter(_.isFile).map(_.getPath)
-      else Seq(p)
-    val visible = files.filterNot { f =>
-      f.getName.startsWith("_") || f.getName.startsWith(".")
-    }
-    val fileFilters = filters.filter(EnvelopeDataSource.fileOnly)
-    visible
-      .map(_.toString)
-      .filter(f => fileFilters.forall(
-        EnvelopeDataSource.eval(_, f, 0L, "", "")))
-      .sorted
-      .map(f => EnvelopeInputPartition(f): InputPartition)
-      .toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new EnvelopeReaderFactory(required, filters)
-
-  override def toMicroBatchStream(checkpointLocation: String): streaming.MicroBatchStream =
-    new EnvelopeMicroBatchStream(path, required, filters)
-}
-
-class EnvelopeReaderFactory(required: StructType,
-    filters: Array[Filter]) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new EnvelopePartitionReader(
-      partition.asInstanceOf[EnvelopeInputPartition].file, required, filters)
-}
-
-/** Streams one file line by line; applies row-level pushed filters before a
-  * row is surfaced; materializes only the pruned columns. */
-class EnvelopePartitionReader(file: String, required: StructType,
-    filters: Array[Filter]) extends PartitionReader[InternalRow] {
-
-  private val p = new Path(file)
-  private val in = p.getFileSystem(new Configuration()).open(p)
-  private val reader = new java.io.BufferedReader(
-    new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
-  private val base = p.getName
-  // file-only filters already pruned partitions; keep only row-level ones
-  private val rowFilters = filters.filterNot(EnvelopeDataSource.fileOnly)
-
-  private var lineNo = 0L
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    var line = reader.readLine()
-    while (line != null) {
-      lineNo += 1
-      val ln = lineNo
-      lazy val recordId = s"$base:$ln"
-      if (rowFilters.forall(EnvelopeDataSource.eval(_, file, ln, recordId, line))) {
-        val values = required.fieldNames.map {
-          case "file" => UTF8String.fromString(file)
-          case "line_no" => java.lang.Long.valueOf(ln)
-          case "recordId" => UTF8String.fromString(recordId)
-          case "data" => UTF8String.fromString(line)
-        }
-        current = new GenericInternalRow(values.asInstanceOf[Array[Any]])
-        return true
-      }
-      line = reader.readLine()
-    }
-    false
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = reader.close()
-}
-
-/** Offset = the SET of files already delivered, serialized as a one-line
-  * JSON array (Spark's offset log is line-oriented — a multi-line offset
-  * would parse as multiple sources). A micro-batch is the set difference
-  * (newly visible files), so a late-arriving file with a lexicographically
-  * early name is still picked up — the failure mode a "sorted prefix
-  * length" offset would have. Spark checkpoints the offset; on restart
-  * `deserializeOffset` restores the delivered set and replay is exactly
-  * the undelivered files. */
-final case class EnvelopeOffset(files: Set[String])
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = {
-    implicit val formats: org.json4s.Formats =
-      org.json4s.jackson.Serialization.formats(org.json4s.NoTypeHints)
-    org.json4s.jackson.Serialization.write(files.toSeq.sorted)
-  }
-}
-
-object EnvelopeOffset {
-  def fromJson(json: String): EnvelopeOffset = {
-    implicit val formats: org.json4s.Formats =
-      org.json4s.jackson.Serialization.formats(org.json4s.NoTypeHints)
-    EnvelopeOffset(
-      org.json4s.jackson.Serialization.read[Seq[String]](json).toSet)
-  }
-}
-
-/** Streaming form of the envelope source: each micro-batch reads the files
-  * that appeared since the last one, through the same pushdown-aware
-  * reader factory as the batch path. File contents are assumed immutable
-  * once dropped (the drop-zone contract the reference's Firehose buffer
-  * flush provides — a producer writes `_tmp` then renames, and hidden
-  * names are skipped until the rename). */
-class EnvelopeMicroBatchStream(path: String, required: StructType,
-    filters: Array[Filter])
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-
-  private def listNow(): Set[String] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
-    if (!fs.exists(p)) return Set.empty
-    val files =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).toSeq.filter(_.isFile).map(_.getPath)
-      else Seq(p)
-    val fileFilters = filters.filter(EnvelopeDataSource.fileOnly)
-    files
-      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
-      .map(_.toString)
-      .filter(f => fileFilters.forall(EnvelopeDataSource.eval(_, f, 0L, "", "")))
-      .toSet
-  }
-
-  override def initialOffset(): org.apache.spark.sql.connector.read.streaming.Offset =
-    EnvelopeOffset(Set.empty)
-
-  override def latestOffset(): org.apache.spark.sql.connector.read.streaming.Offset =
-    EnvelopeOffset(listNow())
-
-  override def deserializeOffset(json: String): org.apache.spark.sql.connector.read.streaming.Offset =
-    EnvelopeOffset.fromJson(json)
-
-  override def planInputPartitions(
-      start: org.apache.spark.sql.connector.read.streaming.Offset,
-      end: org.apache.spark.sql.connector.read.streaming.Offset): Array[InputPartition] = {
-    val done = start.asInstanceOf[EnvelopeOffset].files
-    val now = end.asInstanceOf[EnvelopeOffset].files
-    (now -- done).toSeq.sorted
-      .map(f => EnvelopeInputPartition(f): InputPartition).toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new EnvelopeReaderFactory(required, filters)
-
-  override def commit(end: org.apache.spark.sql.connector.read.streaming.Offset): Unit = ()
-  override def stop(): Unit = ()
 }

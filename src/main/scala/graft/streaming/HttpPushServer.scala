@@ -16,18 +16,19 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   *
   * Architecture mirrors the reference's buffering split, Spark-first:
   * the server SPOOLS (one base64 line per record, atomic tmp+rename into
-  * `<spoolDir>/<stream>/`), and [[EnvelopeSources.textLineStream]] — the
-  * 60 s / 64 MB buffered reader — plays Firehose, admitting the spool into
-  * bounded micro-batches on the same envelope decode path as every other
-  * adapter. Durable and replayable (unlike the socket adapter): records
-  * are on disk before the 200 returns, and the file source's offsets make
-  * re-reads exact.
+  * `<spoolDir>/<stream>/`), and [[envelopeStream]] plays Firehose: the one
+  * envelope reader (`graft-envelope`, [[graft.sources.EnvelopeDataSource]])
+  * on Spark's file stream source, admitting the spool into micro-batches of
+  * at most 64 MB. Durable and replayable: records are on disk before the
+  * 200 returns, the file source's offsets make re-reads exact, and record
+  * ids are spool positions (`rec-N.txt:1`), so a replay rebuilds the same
+  * ids and identical bodies never share one.
   *
   * JDK-only (`com.sun.net.httpserver`), no added dependency. A dev/demo
-  * front door like [[EnvelopeSources.fromSocket]]; the production entrance
-  * stays Kafka ([[EnvelopeSources.fromKafka]]) — a single JVM endpoint is
-  * not a 100 TB ingress, but the envelope contract downstream of it is
-  * identical, which is the semantic the reference defines.
+  * front door; the production entrance stays Kafka
+  * ([[EnvelopeSources.fromKafka]]) — a single JVM endpoint is not a 100 TB
+  * ingress, but the envelope contract downstream of it is identical, which
+  * is the semantic the reference defines.
   *
   * Response mirrors the PutRecord surface: 200 + `{"recordId": "..."}`;
   * non-POST → 405; missing/nested stream path → 404.
@@ -106,11 +107,14 @@ final class HttpPushServer(spoolDir: String) {
 
   def stop(): Unit = server.stop(0)
 
-  /** The Spark side of the contract: the buffered envelope stream over this
-    * server's spool for `stream` — exactly
-    * [[EnvelopeSources.textLineStream]] on the stream's spool dir. */
+  /** The Spark side of the contract: the envelope stream (`recordId`,
+    * `data`) over this server's spool for `stream`. The 64 MB cap per
+    * micro-batch is the reference's Firehose size buffer
+    * (stack.py:165-168); the trigger interval is its time buffer. */
   def envelopeStream(spark: org.apache.spark.sql.SparkSession,
       stream: String): org.apache.spark.sql.DataFrame =
-    EnvelopeSources.textLineStream(spark,
-      Paths.get(spoolDir, stream).toString)
+    spark.readStream.format("graft-envelope")
+      .option("maxBytesPerTrigger", 64L * 1024 * 1024)
+      .load(Paths.get(spoolDir, stream).toString)
+      .select("recordId", "data")
 }

@@ -73,7 +73,9 @@ object StreamingIngest {
   }
 
   /** Wire the ingest pipeline onto a streaming envelope source
-    * (`recordId`, `data` — e.g. Kafka value, socket, or MemoryStream).
+    * (`recordId`, `data`): the push spool ([[HttpPushServer.envelopeStream]]),
+    * any drop zone read through `graft-envelope`, Kafka via
+    * [[EnvelopeSources.fromKafka]], or a MemoryStream in tests.
     * `trigger` defaults to the reference's 60 s buffer interval;
     * `notifier` opts into push delivery of alert rows (see
     * [[AlertNotifier]]). */

@@ -16,12 +16,12 @@ import graft.{SparkEntry, SparkTestSession, Tables}
 
 /** Pins the on-disk fixture cache ([[cachedFixture]]): its key sees a
   * source rewritten with its mtime kept and tells two same-named corpora
-  * apart (as do the sketch directories of q218 and q242), one key builds
-  * once under concurrent callers, a failed build publishes nothing, and
-  * params split the key. Cases over queries run only through query entry
-  * points, on copies of the smoke corpus under a temp directory. A source
-  * lint keeps the cache the only place that stamps files or retires /tmp
-  * entries. */
+  * apart (as do the sketches of q218 and q242), one key builds once under
+  * concurrent callers, a failed build publishes nothing, and params split
+  * the key. A query's frame outlives the query's next call. Cases over
+  * queries run only through query entry points, on copies of the smoke
+  * corpus under a temp directory. A source lint keeps the cache the only
+  * place that stamps files or retires /tmp entries. */
 class FixtureCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = graft.Graft.ensureConfigured(SparkTestSession.spark)
   private val small = "/root/testdata/sf0.001"
@@ -121,6 +121,16 @@ class FixtureCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
       val fromA = run(q, a)
       run(q, b)
       assert(rows(fromA) === rows(run(q, a)), s"$q: B's call replaced A's sketches")
+    }
+  }
+
+  test("a frame built before its query is called again still collects") {
+    Seq("q218_sketch_rollup", "q242_kll_quantiles", "q342_stream_decode_parity",
+        "q345_stream_audio_parity", "q346_stream_video_parity").foreach { q =>
+      val dir = corpus("reuse")
+      val first = run(q, dir)
+      val second = rows(run(q, dir))
+      assert(rows(first) === second, s"$q: the second call broke the first frame")
     }
   }
 

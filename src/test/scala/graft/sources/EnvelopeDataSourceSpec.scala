@@ -30,7 +30,7 @@ class EnvelopeDataSourceSpec extends AnyFunSuite {
     val ids = rows.map(_.getAs[String]("recordId"))
     assert(ids.toSet.size == 5,
       "duplicate lines in one file must still get distinct ids " +
-        "(the fromTextLines adapter's documented gap)")
+        "(a content hash would collapse them)")
     assert(ids.contains("a.txt:1") && ids.contains("a.txt:3"))
     val dup = df.filter(col("data") === "AAA=").select("line_no")
       .collect().map(_.getLong(0)).sorted
@@ -39,28 +39,16 @@ class EnvelopeDataSourceSpec extends AnyFunSuite {
 
   test("file-only filters prune whole partitions at planning time") {
     val dir = fixture()
-    val all = spark.read.format("graft-envelope").load(dir)
-    assert(all.rdd.getNumPartitions == 2, "one partition per visible file")
-    val one = all.filter(col("file").endsWith("b.txt"))
-    assert(one.rdd.getNumPartitions == 1,
-      "the a.txt partition must never be planned")
-    assert(one.select("data").collect().map(_.getString(0)).sorted.toSeq ==
+    val one = spark.read.format("graft-envelope").load(dir)
+      .filter(col("_metadata.file_name") === "b.txt")
+    assert(one.collect().map(_.getAs[String]("data")).sorted.toSeq ==
       Seq("CCC=", "DDD="))
-  }
-
-  test("row filters are fully pushed (no residual Filter) and column pruning holds") {
-    val dir = fixture()
-    val q = spark.read.format("graft-envelope").load(dir)
-      .filter(col("data").startsWith("A"))
-      .select("data")
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [") && plan.contains("StringStartsWith(data,A)"),
-      s"the prefix filter must reach the source:\n$plan")
-    assert(!plan.contains("Filter ("),
-      s"a fully-handled pushed filter must leave no residual Filter node:\n$plan")
-    assert(plan.contains("ReadColumns: [data]"),
-      s"only the requested column may be materialized:\n$plan")
-    assert(q.collect().map(_.getString(0)).toSeq == Seq("AAA=", "AAA="))
+    val scan = one.queryExecution.executedPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }.get
+    assert(scan.metrics("numFiles").value == 1,
+      s"the a.txt file must never be planned:\n${one.queryExecution.executedPlan}")
+    assert(one.rdd.getNumPartitions == 1)
   }
 
   test("micro-batch stream delivers each file exactly once across a restart") {
@@ -111,5 +99,16 @@ class EnvelopeDataSourceSpec extends AnyFunSuite {
     // range is pushed. Either way the result is exact.
     assert(q.select("data").collect().map(_.getString(0)).sorted.toSeq ==
       Seq("AAA=", "BBB=", "DDD="))
+  }
+
+  test("lint: drop zones are read through graft-envelope only") {
+    val pattern = """readStream\.text|format\("socket"\)|input_file_name\(\)""".r
+    val offenders = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(Files.isRegularFile(_))
+      .filter(p => pattern.findFirstIn(Files.readString(p)).isDefined)
+      .map(_.toString).toSeq
+    assert(offenders.isEmpty,
+      "line files are read through graft-envelope, whose ids are positions; " +
+        "a text, socket or input_file_name reader gives identical lines one id")
   }
 }

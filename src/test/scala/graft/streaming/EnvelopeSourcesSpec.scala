@@ -26,56 +26,6 @@ class EnvelopeSourcesSpec extends AnyFunSuite {
     assert(cls.toSeq == Seq("soh"))
   }
 
-  test("text-line drops map to the envelope contract and classify") {
-    val lines = Seq(b64(headerJson)).toDF("value")
-    val env = EnvelopeSources.fromTextLines(lines)
-    assert(env.columns.toSeq == Seq("recordId", "data"))
-    val cls = IngestTransforms.classify(env).select("cls").as[String].collect()
-    assert(cls.toSeq == Seq("soh"))
-  }
-
-  test("socket-shaped lines map to the envelope contract and classify (S1 live-push analog)") {
-    val lines = Seq(b64(headerJson)).toDF("value")
-    val env = EnvelopeSources.fromSocketLines(lines)
-    assert(env.columns.toSeq == Seq("recordId", "data"))
-    val row = env.collect().head
-    assert(row.getString(0).startsWith("sock-"))
-    val cls = IngestTransforms.classify(env).select("cls").as[String].collect()
-    assert(cls.toSeq == Seq("soh"))
-  }
-
-  test("live socket push lands a TCP line through the envelope contract (S1)") {
-    // a real localhost TCP endpoint: the spec plays device gateway, Spark's
-    // socket source connects as the client — the closest sandbox-runnable
-    // form of "point a device gateway at it"
-    val server = new java.net.ServerSocket(0)
-    @volatile var pushErr: Throwable = null
-    val pusher = new Thread(() => {
-      try {
-        val s = server.accept()
-        val w = new java.io.PrintWriter(s.getOutputStream, true)
-        w.println(b64(headerJson))
-        w.flush()
-        Thread.sleep(5000) // hold the connection open while the batch drains
-        w.close(); s.close()
-      } catch { case e: Throwable => pushErr = e }
-    })
-    pusher.setDaemon(true)
-    pusher.start()
-    val env = EnvelopeSources.fromSocket(spark, "localhost", server.getLocalPort)
-    val got = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val q = env.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.collect().foreach(r => got.add(r.getString(1)))
-        ()
-      }.start()
-    try {
-      val v = got.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-      assert(pushErr == null, s"pusher failed: $pushErr")
-      assert(v == b64(headerJson), "the pushed line arrives as the envelope data")
-    } finally { q.stop(); server.close() }
-  }
-
   test("HTTP POST /{stream-name} lands a body through the VTL wrap into the stage row (S1)") {
     // the reference's exact front door, loopback: POST a RAW JSON body (the
     // device speaks plain JSON; the VTL template does the base64 wrap,
@@ -159,14 +109,17 @@ class EnvelopeSourcesSpec extends AnyFunSuite {
     // four one-line drop files; a byte cap far below one file's size forces
     // one file per micro-batch (file granularity: at least one file always
     // admits), while the uncapped reader drains the backlog in one batch —
-    // the Firehose 64 MB buffer-flush analog (stack.py:165-168).
+    // the Firehose 64 MB buffer-flush analog (stack.py:165-168), which
+    // HttpPushServer.envelopeStream sets through the same option.
     val dir = java.nio.file.Files.createTempDirectory("graft-sizecap")
     (1 to 4).foreach { i =>
       java.nio.file.Files.write(dir.resolve(s"drop-$i.txt"),
         (b64(headerJson) + "\n").getBytes("UTF-8"))
     }
     def runAndCountBatches(maxBytes: Option[Long]): (Int, Long) = {
-      val env = EnvelopeSources.textLineStream(spark, dir.toString, maxBytes)
+      val reader = spark.readStream.format("graft-envelope")
+      val env = maxBytes.fold(reader)(reader.option("maxBytesPerTrigger", _))
+        .load(dir.toString).select("recordId", "data")
       val sizes = scala.collection.mutable.ArrayBuffer.empty[Long]
       val q = env.writeStream
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

@@ -168,12 +168,13 @@ class StreamingIngestSpec extends AnyFunSuite {
       .select("batch_id").distinct().count() == 2)
   }
 
-  test("file-drop source end-to-end: readStream.text drives the full pipeline, restart picks up only new files") {
+  test("file-drop source end-to-end through graft-envelope") {
     // The closest sandbox analog of the reference's live push front door
     // (stack.py:283-316): an unbounded directory source with checkpointed
     // offsets, not a MemoryStream. FileStreamSource tracks seen files in the
     // checkpoint, so a restart must process exactly the files dropped while
-    // the query was down — no reprocessing, no loss.
+    // the query was down — no reprocessing, no loss. Record ids are line
+    // positions, so two byte-identical lines stay two records.
     val base = Files.createTempDirectory("graft-filedrop").toString
     val drop = new java.io.File(base, "drop"); drop.mkdirs()
     val paths = StreamingIngest.Paths(s"$base/lake")
@@ -185,7 +186,8 @@ class StreamingIngestSpec extends AnyFunSuite {
       assert(tmp.renameTo(new java.io.File(drop, name)))
     }
     def run(): Unit = {
-      val env = EnvelopeSources.fromTextLines(spark.readStream.text(drop.toString))
+      val env = spark.readStream.format("graft-envelope").load(drop.toString)
+        .select("recordId", "data")
       val q = StreamingIngest.start(spark, env, geo, paths, Trigger.AvailableNow())
       q.processAllAvailable(); q.stop()
     }
@@ -210,6 +212,14 @@ class StreamingIngestSpec extends AnyFunSuite {
     // a third restart with nothing new is a no-op
     run()
     assert(StreamingIngest.stageTable(spark, paths).count() == 3)
+
+    // two byte-identical lines in one file land as two stage rows
+    val twin = sohEnvelope(4, 1678759400L)._2
+    dropFile("d.txt", Seq(twin, twin))
+    run()
+    val twins = StreamingIngest.stageTable(spark, paths)
+      .filter($"deviceid" === 4).select("recordId").as[String].collect()
+    assert(twins.sorted.toSeq == Seq("d.txt:1", "d.txt:2"))
   }
 
   test("restart from checkpoint does not reprocess delivered batches (ST5)") {
