@@ -31,11 +31,22 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * is the semantic the reference defines.
   *
   * Response mirrors the PutRecord surface: 200 + `{"recordId": "..."}`;
-  * non-POST → 405; missing/nested stream path → 404.
+  * non-POST → 405; missing/nested stream path → 404; a body over
+  * PutRecord's 1,000 KiB data limit → 413, with nothing spooled.
+  *
+  * Accepted sockets run with TCP_NODELAY. The JDK server writes a response
+  * as two small writes (headers, then body); under Nagle the second waits
+  * for the client's ACK of the first, which the client delays, so every
+  * POST would stall ≈40 ms and one connection would acknowledge ≈22 POST/s.
+  * The JDK reads the switch, `sun.net.httpserver.nodelay`, once per JVM, so
+  * it is JVM-wide: it holds for every `com.sun.net.httpserver` server in the
+  * process, and only if none was created before this class's first
+  * instance. An explicit `-Dsun.net.httpserver.nodelay=false` still wins.
   */
 final class HttpPushServer(spoolDir: String) {
-  private val server =
-    HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+  import HttpPushServer.MaxRecordBytes
+
+  private val server = HttpPushServer.bindLoopback()
   // Seed past any record already on disk: a fresh instance over an existing
   // spool must NOT restart at 1 — rec-N.txt collisions would atomically
   // REPLACE spooled records, and a file-source checkpoint that has already
@@ -78,7 +89,10 @@ final class HttpPushServer(spoolDir: String) {
     if (stream.isEmpty || stream.contains("/") || stream.contains(".."))
       return respond(ex, 404,
         """{"message":"expected POST /{stream-name}"}""")
-    val body = ex.getRequestBody.readAllBytes()
+    // bounded read: an oversized or endless body must not fill the heap
+    val body = ex.getRequestBody.readNBytes(MaxRecordBytes + 1)
+    if (body.length > MaxRecordBytes)
+      return respond(ex, 413, """{"message":"record larger than 1000 KiB"}""")
     // the VTL wrap, verbatim: the record's data IS base64 of the raw body
     val data = java.util.Base64.getEncoder.encodeToString(body)
     val n = seq.incrementAndGet()
@@ -117,4 +131,19 @@ final class HttpPushServer(spoolDir: String) {
       .option("maxBytesPerTrigger", 64L * 1024 * 1024)
       .load(Paths.get(spoolDir, stream).toString)
       .select("recordId", "data")
+}
+
+object HttpPushServer {
+  /** Firehose `PutRecord`'s data limit, 1,000 KiB: the reference's own bound
+    * on one record. */
+  val MaxRecordBytes: Int = 1000 * 1024
+
+  // TCP_NODELAY (see the class doc). sun.net.httpserver.ServerConfig reads
+  // this once per JVM, on the first HttpServer.create, so it is set here,
+  // before bindLoopback's first call, and only when unset so that an
+  // explicit -Dsun.net.httpserver.nodelay=false wins.
+  sys.props.getOrElseUpdate("sun.net.httpserver.nodelay", "true")
+
+  private def bindLoopback(): HttpServer =
+    HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
 }

@@ -155,8 +155,11 @@ object StreamingIngest {
       // directory tree at the top exactly as before, and a replay's dynamic
       // overwrite replaces precisely the (y,m,d,batch_id) leaves this batch
       // produces — deterministic transforms make the rewrite identical.
+      // A string literal, as stageReadSchema reads it back: a Long literal
+      // is inlined into the generated code, so every batch would compile
+      // fresh classes; a string one is passed by reference.
       val stage = stageFromClassified(classified, geoDim)
-      stage.withColumn("batch_id", lit(batchId))
+      stage.withColumn("batch_id", lit(batchId.toString))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .option("compression", paths.stageCompression)

@@ -11,6 +11,22 @@ class EnvelopeSourcesSpec extends AnyFunSuite {
   def b64(s: String): String =
     java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
 
+  /** One fixed-length `HttpURLConnection` POST, the shape device clients
+    * use; reads the response fully so the connection is kept alive. */
+  def postFixed(port: Int, path: String, body: Array[Byte]): (Int, String) = {
+    val c = java.net.URI.create(s"http://127.0.0.1:$port$path").toURL
+      .openConnection().asInstanceOf[java.net.HttpURLConnection]
+    c.setRequestMethod("POST")
+    c.setDoOutput(true)
+    c.setFixedLengthStreamingMode(body.length)
+    val out = c.getOutputStream
+    out.write(body)
+    out.close()
+    val code = c.getResponseCode
+    val in = if (code < 400) c.getInputStream else c.getErrorStream
+    try (code, new String(in.readAllBytes(), "UTF-8")) finally in.close()
+  }
+
   val headerJson =
     s"""{"packetId":1,"deviceType":1,"deviceId":5,"userApplicationId":1,"organizationId":1,"len":1,"status":0,"hiveRxTime":"x","data":"${b64("""{"ln":1.0,"lt":2.0,"d":1678759166}""")}"}"""
 
@@ -141,5 +157,43 @@ class EnvelopeSourcesSpec extends AnyFunSuite {
     val (openBatches, openRows) = runAndCountBatches(None)
     assert(openRows == 4)
     assert(openBatches == 1, "uncapped reader drains the backlog in one batch")
+  }
+
+  test("HTTP push acknowledges sequential POSTs on one connection without the delayed-ACK stall") {
+    // Headers and body go out as two writes; without TCP_NODELAY, Nagle
+    // holds the body until the client's delayed ACK, ≈40 ms per POST. The
+    // median, not the sum, so one GC pause cannot fail the bound.
+    val spool = java.nio.file.Files.createTempDirectory("graft-httppush-nodelay")
+    val srv = new HttpPushServer(spool.toString)
+    val port = srv.start()
+    try {
+      val body = headerJson.getBytes("UTF-8")
+      val ms = (1 to 40).map { _ =>
+        val t0 = System.nanoTime()
+        val (code, _) = postFixed(port, "/s1", body)
+        assert(code == 200)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      val median = (ms(19) + ms(20)) / 2
+      assert(median < 20.0, f"median round trip $median%.1f ms")
+    } finally srv.stop()
+  }
+
+  test("HTTP push rejects a body over PutRecord's 1,000 KiB limit with 413 and spools nothing") {
+    val spool = java.nio.file.Files.createTempDirectory("graft-httppush-413")
+    val srv = new HttpPushServer(spool.toString)
+    val port = srv.start()
+    def spooled() = Option(spool.resolve("s1").toFile.list())
+      .getOrElse(Array.empty[String]).toSet
+    try {
+      val max = HttpPushServer.MaxRecordBytes
+      assert(postFixed(port, "/s1", Array.fill(max)('a'.toByte))._1 == 200)
+      val before = spooled()
+      assert(before.size == 1)
+      val (code, msg) = postFixed(port, "/s1", Array.fill(max + 1)('a'.toByte))
+      assert(code == 413)
+      assert(msg == """{"message":"record larger than 1000 KiB"}""")
+      assert(spooled() == before, "a rejected record must leave no spool file")
+    } finally srv.stop()
   }
 }

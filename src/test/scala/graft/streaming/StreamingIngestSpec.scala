@@ -244,4 +244,29 @@ class StreamingIngestSpec extends AnyFunSuite {
     assert(stage.count() == 2, "no duplicate rows after restart")
     assert(stage.select("deviceid").as[Int].collect().toSet == Set(1, 2))
   }
+
+  test("a same-shape micro-batch recompiles only the alerts check: the stage batch_id is not inlined") {
+    // A Long literal is inlined into generated code, so each batchId would
+    // compile fresh classes; the stage sink's string literal is passed by
+    // reference. Batches 2 and 3 differ only in batchId and record ids and
+    // raise no alert. What batch 3 still compiles is the alerts check
+    // (`alertRows.isEmpty`): Spark names a LIMIT's counter from a JVM-wide
+    // sequence (`_limit_counter_N`), so that plan's code differs every time
+    // (2 classes). A Long stage batch_id costs 2 more.
+    val paths = StreamingIngest.Paths(
+      Files.createTempDirectory("graft-codegen").toString)
+    def compiles: Long = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    val after = (1L to 3L).map { id =>
+      val batch = Seq(sohEnvelope(id.toInt, 1678759166L + id),
+        ("bad-" + id, "!!! not base64 !!!")).toDF("recordId", "data")
+      StreamingIngest.writeBatch(batch, geo, paths, batchId = id)
+      compiles
+    }
+    val limitClasses = 2
+    assert(after(2) - after(1) == limitClasses,
+      s"batch 3 compiled ${after(2) - after(1)} classes; counter after each batch: $after")
+    assert(StreamingIngest.stageTable(spark, paths)
+      .select("batch_id").as[String].collect().sorted.toSeq == Seq("1", "2", "3"))
+  }
 }
