@@ -243,10 +243,14 @@ object IngestTransforms {
       .select(col("recordId") +: cols :+ col("year") :+ col("month") :+ col("day"): _*)
   }
 
+  /** O14's predicate over a stage row: low solar or low battery voltage. */
+  def alertCondition: Column =
+    col("solar_panel_voltage") < 12 || col("battery_voltage") < 4
+
   /** O14: alert predicates (hello.py:181-192 — present but commented out in
     * the reference; README claims the capability, so it ships here). */
   def alerts(stage: DataFrame): DataFrame =
-    stage.filter(col("solar_panel_voltage") < 12 || col("battery_voltage") < 4)
+    stage.filter(alertCondition)
       .select(col("deviceid"), col("date_time"),
         col("solar_panel_voltage"), col("battery_voltage"),
         when(col("solar_panel_voltage") < 12, "low_solar_voltage")

@@ -1,7 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.atomic.AtomicReference
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ingest.IngestTransforms._
 
@@ -16,6 +19,8 @@ import graft.ingest.IngestTransforms._
   *   - `error/`   undecodable records (stack.py:213 — but explicit, not via
   *                record-id omission; fixes §2.8.4)
   *   - `alerts/`  voltage alert rows (hello.py:181-192 / S14)
+  * The stage write runs first and observes which of the others have rows;
+  * those then run concurrently (see [[StreamingIngest.writeBatch]]).
   *
   * Late data (ST3): append-only event-time partitioning lands late rows in
   * old partitions with no state to invalidate — no watermark required.
@@ -92,23 +97,42 @@ object StreamingIngest {
       .option("checkpointLocation", paths.checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatch(batch, geoDim, paths, batchId, notifier)
+        writeBatch(batch, geoDim, paths, batchId, notifier): Unit
       }
       .start()
   }
 
-  /** One micro-batch: classify once, fan out to the five sinks. Every write
-    * is batchId-keyed (see delivery notes above) so a replayed batch lands
-    * idempotently. Also directly usable for batch backfill over archived
-    * envelopes (pick distinct batchIds per backfill slice).
+  /** What one micro-batch held, observed on its stage write: records per
+    * class (every class a key, 0 when absent) and alert rows. */
+  final case class BatchCounts(byClass: Map[String, Long], alerts: Long)
+
+  /** One micro-batch: classify once, write the stage, then fan out to the
+    * other sinks concurrently. Every write is batchId-keyed (see delivery
+    * notes above) so a replayed batch lands idempotently. Also directly
+    * usable for batch backfill over archived envelopes (pick distinct
+    * batchIds per backfill slice).
+    *
+    * Order within a batch:
+    *   1. the stage write runs alone. It fills the persisted `classified`
+    *      cache, and two `Observation`s ride it: records per class, counted
+    *      before the SOH filter, and alert rows. No job only checks
+    *      presence;
+    *   2. the observations pick the sinks that have rows: raw soh, sensor and
+    *      unknown, error, and alerts (the notifier after its table, on the
+    *      same thread). No directory is created for an empty class, and none
+    *      for a batch without alerts (the reference's per-class upload flags,
+    *      hello.py:56-58, 203-227);
+    *   3. those sinks run concurrently, one fresh thread each (see
+    *      [[runConcurrently]]). All are joined before the cache is dropped;
+    *      the first failure is rethrown after every sink has finished.
     *
     * Scale note: one `batch_id=` leaf per micro-batch per event-date is the
     * same file count the plain append produced; the extra directory level
     * costs nothing at scan time (partition pruning never filters on it) and
     * is what StageCompactor folds away. */
   def writeBatch(batch: DataFrame, geoDim: DataFrame, paths: Paths,
-      batchId: Long, notifier: Option[AlertNotifier] = None): Unit = {
-    // Classify once; persist so the five sinks don't re-decode the batch.
+      batchId: Long, notifier: Option[AlertNotifier] = None): BatchCounts = {
+    // Classify once; persist so the sinks don't re-decode the batch.
     val classified = classify(batch).persist()
     try {
       // Processing-time partition for the raw zones (hello.py:52-53) — the
@@ -120,68 +144,106 @@ object StreamingIngest {
         lit(f"${now.getMonthValue}%02d").as("month"),
         lit(f"${now.getDayOfMonth}%02d").as("day"))
 
-      // One pass over the cached batch decides which classes are present —
-      // the reference's per-class upload flags (hello.py:56-58, 203-227) as
-      // a single aggregation, instead of one isEmpty job per sink (4 extra
-      // jobs of micro-batch latency at a 60 s trigger).
-      val present = classified.groupBy("cls").count()
-        .collect().map(_.getString(0)).toSet
+      // Event-time partitioned analytic zone (stack.py:214, 233), batch_id
+      // as the LAST partition level: pruning on year/month/day cuts the
+      // directory tree at the top exactly as before, and a replay's dynamic
+      // overwrite replaces precisely the (y,m,d,batch_id) leaves this batch
+      // produces — deterministic transforms make the rewrite identical.
+      // batch_id is a string literal here and in the alerts sink: a Long
+      // literal is inlined into the generated code, so every batch would
+      // compile fresh classes; a string one is passed by reference.
+      val classes = Seq(ClassSoh, ClassSensor, ClassUnknown, ClassError)
+      val perClass = Observation()
+      val alertRows = Observation()
+      val counters = classes.map(c => count_if(col("cls") === c).as(c))
+      stageFromClassified(
+          classified.observe(perClass, counters.head, counters.tail: _*), geoDim)
+        .observe(alertRows, count_if(alertCondition).as("alerts"))
+        .withColumn("batch_id", lit(batchId.toString))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .option("compression", paths.stageCompression)
+        .partitionBy("year", "month", "day", "batch_id")
+        .parquet(paths.stage)
+      val byClass = perClass.get
+      val counts = BatchCounts(classes.map(c => c -> byClass(c).asInstanceOf[Long]).toMap,
+        alertRows.get("alerts").asInstanceOf[Long])
 
       // Raw/error zones: `zone/batch=<id>/year=…/month=…/day=…`. The
       // batch-scoped root + full overwrite is the idempotence unit: a replay
       // deletes the whole `batch=<id>` tree (partial files of a crashed
       // attempt included, even if the wall-clock date moved on) and
       // rewrites it.
-      def writeRaw(cls: String, dir: String): Unit =
-        if (present(cls))
-          classified.filter(col("cls") === cls)
-            .select((decodeB64(col("data")).as("value") +: procCols): _*)
-            .write.mode("overwrite")
-            .partitionBy("year", "month", "day")
-            .text(s"$dir/batch=$batchId")
-      writeRaw(ClassSoh, paths.rawSoh)
-      writeRaw(ClassSensor, paths.rawSensor)
-      writeRaw(ClassUnknown, paths.rawUnknown)
-
-      if (present(ClassError))
+      def raw(cls: String, dir: String): () => Unit = () =>
+        classified.filter(col("cls") === cls)
+          .select((decodeB64(col("data")).as("value") +: procCols): _*)
+          .write.mode("overwrite")
+          .partitionBy("year", "month", "day")
+          .text(s"$dir/batch=$batchId")
+      val errors: () => Unit = () =>
         classified.filter(col("cls") === ClassError)
           .select((col("recordId") +: col("data") +: procCols): _*)
           .write.mode("overwrite")
           .partitionBy("year", "month", "day")
           .json(s"${paths.error}/batch=$batchId")
-
-      // Event-time partitioned analytic zone (stack.py:214, 233), batch_id
-      // as the LAST partition level: pruning on year/month/day cuts the
-      // directory tree at the top exactly as before, and a replay's dynamic
-      // overwrite replaces precisely the (y,m,d,batch_id) leaves this batch
-      // produces — deterministic transforms make the rewrite identical.
-      // A string literal, as stageReadSchema reads it back: a Long literal
-      // is inlined into the generated code, so every batch would compile
-      // fresh classes; a string one is passed by reference.
-      val stage = stageFromClassified(classified, geoDim)
-      stage.withColumn("batch_id", lit(batchId.toString))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", paths.stageCompression)
-        .partitionBy("year", "month", "day", "batch_id")
-        .parquet(paths.stage)
-
-      val alertRows = alerts(stage)
-      if (!alertRows.isEmpty) {
-        val withId = alertRows.withColumn("batch_id", lit(batchId))
-        withId.write.mode("overwrite")
+      val alertSink: () => Unit = () => {
+        val rows = alerts(stageFromClassified(classified, geoDim))
+        rows.withColumn("batch_id", lit(batchId.toString))
+          .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("batch_id")
           .parquet(paths.alerts)
         // push AFTER the durable sink: a crash between the two replays the
         // batch and re-publishes (at-least-once), never publishes alerts
-        // that were lost from the table. Executor-side fan-out.
+        // that were lost from the table. Executor-side fan-out; the Long
+        // batch_id is appended per row, outside the generated code.
         notifier.foreach { n =>
-          withId.foreachPartition((rows: Iterator[org.apache.spark.sql.Row]) =>
-            rows.foreach(n.publish))
+          val schema = rows.schema.add("batch_id", LongType, nullable = false)
+          rows.foreachPartition((it: Iterator[Row]) => it.foreach(r =>
+            n.publish(new GenericRowWithSchema((r.toSeq :+ batchId).toArray, schema))))
         }
       }
+      runConcurrently(Seq(
+        ClassSoh -> raw(ClassSoh, paths.rawSoh),
+        ClassSensor -> raw(ClassSensor, paths.rawSensor),
+        ClassUnknown -> raw(ClassUnknown, paths.rawUnknown),
+        ClassError -> errors).filter { case (cls, _) => counts.byClass(cls) > 0 } ++
+        Seq("alerts" -> alertSink).filter(_ => counts.alerts > 0))
+      counts
     } finally classified.unpersist()
+  }
+
+  /** Run each named sink on a fresh thread and wait for all of them. Fresh
+    * threads, never a shared pool: Spark's local properties — the query's
+    * job group (which `stop()` cancels), `streaming.sql.batchId` and the SQL
+    * execution id — are inheritable thread-locals, copied when a thread is
+    * created, so only a thread made inside the batch carries that batch's.
+    * The first failure is rethrown once every sink has finished, later ones
+    * suppressed onto it; an interrupt (`stop()`) is passed on to the sinks
+    * and rethrown after they have ended. */
+  private def runConcurrently(sinks: Seq[(String, () => Unit)]): Unit = {
+    val failure = new AtomicReference[Throwable]()
+    val threads = sinks.map { case (name, body) =>
+      val t = new Thread(() =>
+        try body() catch {
+          case e: Throwable =>
+            if (!failure.compareAndSet(null, e)) failure.get.addSuppressed(e)
+        }, s"graft-ingest-sink-$name")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    var interrupted: InterruptedException = null
+    threads.foreach { t =>
+      while (t.isAlive) try t.join() catch {
+        case e: InterruptedException if interrupted == null =>
+          interrupted = e
+          threads.foreach(_.interrupt())
+        case _: InterruptedException =>
+      }
+    }
+    if (interrupted != null) throw interrupted
+    Option(failure.get).foreach(e => throw e)
   }
 
   /** Register the landed stage zone as a queryable table — the Glue-catalog

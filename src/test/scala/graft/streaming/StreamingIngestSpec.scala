@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
-import graft.ingest.GeoDim
+import graft.ingest.{GeoDim, IngestTransforms}
 
 /** Streaming-semantics tests (SURVEY.md §5.2.5): multi-sink micro-batch,
   * event-time vs processing-time partitioning (ST2), late data (ST3),
@@ -19,9 +19,10 @@ class StreamingIngestSpec extends AnyFunSuite {
   def b64(s: String): String =
     java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
 
-  def sohEnvelope(deviceId: Int, epoch: Long): (String, String) = {
+  /** An SOH record; a battery voltage `bv` below 4 raises an alert. */
+  def sohEnvelope(deviceId: Int, epoch: Long, bv: Double = 4.05): (String, String) = {
     val inner =
-      s"""{"ln":-122.4194,"lt":37.7749,"si":0.42,"bi":-0.11,"sv":13.8,"bv":4.05,"d":$epoch,"n":12,"a":16.0,"s":0.3,"c":184.2,"r":-91,"ti":0.07}"""
+      s"""{"ln":-122.4194,"lt":37.7749,"si":0.42,"bi":-0.11,"sv":13.8,"bv":$bv,"d":$epoch,"n":12,"a":16.0,"s":0.3,"c":184.2,"r":-91,"ti":0.07}"""
     val header =
       s"""{"packetId":1,"deviceType":1,"deviceId":$deviceId,"userApplicationId":65002,"organizationId":10842,"len":173,"status":0,"hiveRxTime":"x","data":"${b64(inner)}"}"""
     (s"rec-$deviceId-$epoch", b64(header))
@@ -245,28 +246,202 @@ class StreamingIngestSpec extends AnyFunSuite {
     assert(stage.select("deviceid").as[Int].collect().toSet == Set(1, 2))
   }
 
-  test("a same-shape micro-batch recompiles only the alerts check: the stage batch_id is not inlined") {
+  test("same-shape micro-batches compile no new classes, alert or not") {
     // A Long literal is inlined into generated code, so each batchId would
-    // compile fresh classes; the stage sink's string literal is passed by
-    // reference. Batches 2 and 3 differ only in batchId and record ids and
-    // raise no alert. What batch 3 still compiles is the alerts check
-    // (`alertRows.isEmpty`): Spark names a LIMIT's counter from a JVM-wide
-    // sequence (`_limit_counter_N`), so that plan's code differs every time
-    // (2 classes). A Long stage batch_id costs 2 more.
+    // compile fresh classes; the stage and alerts sinks write batch_id as a
+    // string literal, passed by reference, and no job checks presence
+    // (a LIMIT's generated code names its counter from a JVM-wide sequence,
+    // so an `isEmpty` check compiled 2 classes every batch). Batches 2 and
+    // 3 differ from their predecessor only in batchId and record ids and
+    // raise no alert; batch 5 does the same for batch 4, which carries one.
     val paths = StreamingIngest.Paths(
       Files.createTempDirectory("graft-codegen").toString)
     def compiles: Long = org.apache.spark.metrics.source.CodegenMetrics
       .METRIC_COMPILATION_TIME.getCount
-    val after = (1L to 3L).map { id =>
-      val batch = Seq(sohEnvelope(id.toInt, 1678759166L + id),
+    val after = (1L to 5L).map { id =>
+      val bv = if (id >= 4) 3.2 else 4.05
+      val batch = Seq(sohEnvelope(id.toInt, 1678759166L + id, bv),
         ("bad-" + id, "!!! not base64 !!!")).toDF("recordId", "data")
       StreamingIngest.writeBatch(batch, geo, paths, batchId = id)
       compiles
     }
-    val limitClasses = 2
-    assert(after(2) - after(1) == limitClasses,
+    assert(after(2) - after(1) == 0,
       s"batch 3 compiled ${after(2) - after(1)} classes; counter after each batch: $after")
+    assert(after(4) - after(3) == 0,
+      s"alert-bearing batch 5 compiled ${after(4) - after(3)} classes; counter after each batch: $after")
     assert(StreamingIngest.stageTable(spark, paths)
-      .select("batch_id").as[String].collect().sorted.toSeq == Seq("1", "2", "3"))
+      .select("batch_id").as[String].collect().sorted.toSeq == Seq("1", "2", "3", "4", "5"))
+    assert(spark.read.parquet(paths.alerts).select($"batch_id".cast("string"))
+      .as[String].collect().sorted.toSeq == Seq("4", "5"))
+  }
+
+  test("observed class and alert counts equal a driver recount, empty and errors-only batches included") {
+    // The stage write's observations decide which sinks run; they must
+    // equal a separate recount, and must arrive for a batch with no SOH
+    // row (errors only) and for one with no row at all.
+    val paths = StreamingIngest.Paths(
+      Files.createTempDirectory("graft-observe").toString)
+    val mixed = Seq(
+      sohEnvelope(1, 1678759166L),
+      sohEnvelope(2, 1678759167L, bv = 3.2),
+      sohEnvelope(3, 1577836800L, bv = 3.9),
+      sensorEnvelope("s1", "$PIMD8,1,1,866,65098,37.7749,N,122.4194,W,*4F"),
+      sensorEnvelope("u1", "$GPGGA,123519,4807.038,N"),
+      ("bad1", "!!! not base64 !!!"))
+    val errorsOnly = Seq(("bad-1", "!!!"), ("bad-2", "also not base64"))
+    val batches = Seq(mixed, errorsOnly, Seq.empty[(String, String)])
+      .map(_.toDF("recordId", "data"))
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val observed = batches.zipWithIndex.map { case (b, i) =>
+      Await.result(Future(StreamingIngest.writeBatch(b, geo, paths, batchId = i.toLong)),
+        3.minutes)
+    }
+    batches.zip(observed).foreach { case (b, counts) =>
+      val recount = IngestTransforms.classify(b).groupBy("cls").count()
+        .as[(String, Long)].collect().toMap
+      val classes = Seq(IngestTransforms.ClassSoh, IngestTransforms.ClassSensor,
+        IngestTransforms.ClassUnknown, IngestTransforms.ClassError)
+      assert(counts.byClass == classes.map(c => c -> recount.getOrElse(c, 0L)).toMap)
+      assert(counts.alerts ==
+        IngestTransforms.alerts(IngestTransforms.sohToStage(b, geo)).count())
+    }
+    assert(observed.map(_.alerts) == Seq(2L, 0L, 0L))
+    assert(observed.map(_.byClass.values.sum) == Seq(6L, 2L, 0L))
+  }
+
+  test("a sink that fails mid-batch is replayed from the checkpoint: zones exact, alerts at least once") {
+    // The notifier throws once, after the alerts table and beside the other
+    // sinks; the batch is not committed, so the restarted query replays it.
+    StreamingIngestSpec.published.clear()
+    StreamingIngestSpec.failNext.set(true)
+    val paths = StreamingIngest.Paths(
+      Files.createTempDirectory("graft-crash").toString)
+    implicit val sqlCtx = spark.sqlContext
+    val source = MemoryStream[(String, String)]
+    val df = source.toDF().toDF("recordId", "data")
+    source.addData(
+      sohEnvelope(1, 1678759166L),
+      sohEnvelope(2, 1678759167L, bv = 3.2),
+      sohEnvelope(3, 1678759168L, bv = 3.1),
+      sensorEnvelope("s1", "$PIMD8,1,1,866,65098,37.7749,N,122.4194,W,*4F"),
+      sensorEnvelope("u1", "$GPGGA,123519,4807.038,N"),
+      ("bad1", "!!! not base64 !!!"), ("bad2", "also not base64"))
+    def run() = StreamingIngest.start(spark, df, geo, paths, Trigger.AvailableNow(),
+      notifier = Some(new StreamingIngestSpec.FailOnce))
+    val q1 = run()
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q1.processAllAvailable())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("notifier down")), e)
+    assert(!StreamingIngestSpec.failNext.get)
+
+    val q2 = run()
+    q2.processAllAvailable(); q2.stop()
+    val stage = StreamingIngest.stageTable(spark, paths)
+    assert(stage.count() == 3, "stage holds each SOH record once")
+    assert(stage.select("deviceid").as[Int].collect().toSet == Set(1, 2, 3))
+    def rawCount(dir: String) = spark.read.textFile(dir + "/*/*/*/*").count()
+    assert(rawCount(paths.rawSoh) == 3)
+    assert(rawCount(paths.rawSensor) == 1)
+    assert(rawCount(paths.rawUnknown) == 1)
+    assert(spark.read.json(paths.error + "/*/*/*/*").select("recordId").as[String]
+      .collect().sorted.toSeq == Seq("bad1", "bad2"))
+    assert(spark.read.parquet(paths.alerts).count() == 2)
+    assert(StreamingIngestSpec.published.asScala.map(_._2).toSet == Set(2, 3),
+      "each alert is published at least once")
+  }
+
+  test("sink jobs carry their batch's id and the query's job group; a failing sink fails the batch after the others finish") {
+    // Sink threads are made inside the batch, so they inherit its local
+    // properties: every job submitted while a batch runs carries that
+    // batch's `streaming.sql.batchId` and the query's job group, which
+    // `stop()` cancels.
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = Option(j.properties).getOrElse(new java.util.Properties)
+        jobs.add((j.time, p.getProperty("streaming.sql.batchId"),
+          p.getProperty("spark.jobGroup.id")))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val paths = StreamingIngest.Paths(
+      Files.createTempDirectory("graft-props").toString)
+    implicit val sqlCtx = spark.sqlContext
+    val source = MemoryStream[(String, String)]
+    val q = StreamingIngest.start(spark, source.toDF().toDF("recordId", "data"),
+      geo, paths, Trigger.ProcessingTime(0L))
+    try {
+      Seq(1, 2).foreach { i =>
+        source.addData(sohEnvelope(i, 1678759166L + i, bv = 3.2),
+          sensorEnvelope(s"s$i", "$PIMD8,1,1,866,65098,37.7749,N,122.4194,W,*4F"),
+          sensorEnvelope(s"u$i", "$GPGGA,123519,4807.038,N"),
+          (s"bad$i", "!!! not base64 !!!"))
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    // fence: listener events arrive in order, so once this job is seen,
+    // every job of the query has been recorded
+    spark.sparkContext.setJobGroup("fence", "fence")
+    try spark.sparkContext.parallelize(Seq(1)).count()
+    finally spark.sparkContext.clearJobGroup()
+    val deadline = System.currentTimeMillis() + 60000
+    while (!jobs.asScala.exists(_._3 == "fence") && System.currentTimeMillis() < deadline)
+      Thread.sleep(50)
+    spark.sparkContext.removeSparkListener(listener)
+    val batches = q.recentProgress.filter(_.numInputRows > 0)
+    assert(batches.map(_.batchId).toSeq == Seq(0L, 1L))
+    batches.foreach { p =>
+      val t0 = java.time.Instant.parse(p.timestamp).toEpochMilli
+      val t1 = t0 + p.durationMs.get("triggerExecution").longValue
+      val inBatch = jobs.asScala.filter { case (t, _, _) => t >= t0 && t <= t1 }.toSeq
+      assert(inBatch.size >= 5, s"batch ${p.batchId}: $inBatch")
+      inBatch.foreach { case (_, batchId, group) =>
+        assert(batchId == p.batchId.toString && group == q.runId.toString,
+          s"batch ${p.batchId} ran a job with batchId=$batchId group=$group")
+      }
+    }
+
+    // A sink that fails (raw/soh's root is a file) fails the batch, but only
+    // after the others have landed, and leaves no sink thread behind.
+    StreamingIngestSpec.published.clear()
+    val broken = StreamingIngest.Paths(
+      Files.createTempDirectory("graft-broken").toString)
+    new java.io.File(broken.rawSoh).getParentFile.mkdirs()
+    assert(new java.io.File(broken.rawSoh).createNewFile())
+    val batch = Seq(sohEnvelope(1, 1678759166L, bv = 3.2),
+      sensorEnvelope("s1", "$PIMD8,1,1,866,65098,37.7749,N,122.4194,W,*4F"),
+      sensorEnvelope("u1", "$GPGGA,123519,4807.038,N"),
+      ("bad1", "!!! not base64 !!!")).toDF("recordId", "data")
+    val e = intercept[Exception](StreamingIngest.writeBatch(batch, geo, broken,
+      batchId = 9L, notifier = Some(new StreamingIngestSpec.FailOnce)))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("raw/soh")), e)
+    assert(spark.read.textFile(broken.rawSensor + "/*/*/*/*").count() == 1)
+    assert(spark.read.textFile(broken.rawUnknown + "/*/*/*/*").count() == 1)
+    assert(spark.read.json(broken.error + "/*/*/*/*").count() == 1)
+    assert(spark.read.parquet(broken.alerts).count() == 1)
+    assert(StreamingIngestSpec.published.asScala.toSeq == Seq((9L, 1)))
+    val alive = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("graft-ingest-sink-") && t.isAlive)
+    assert(alive.isEmpty, alive)
+  }
+}
+
+/** Executor-side notifier state: local mode runs `publish` in this JVM. */
+object StreamingIngestSpec {
+  val published = java.util.Collections.synchronizedList(
+    new java.util.ArrayList[(Long, Int)]())
+  val failNext = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** Records each alert; throws instead while `failNext` is set, once. */
+  class FailOnce extends StreamingIngest.AlertNotifier {
+    def publish(alert: org.apache.spark.sql.Row): Unit = {
+      if (failNext.compareAndSet(true, false))
+        throw new IllegalStateException("notifier down")
+      published.add((alert.getAs[Long]("batch_id"), alert.getAs[Int]("deviceid")))
+    }
   }
 }
