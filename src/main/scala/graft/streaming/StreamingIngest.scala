@@ -1,10 +1,14 @@
 package graft.streaming
 
 import java.util.concurrent.atomic.AtomicReference
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusCache,
+  HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ingest.IngestTransforms._
 
@@ -41,8 +45,11 @@ import graft.ingest.IngestTransforms._
   * (stack.py:213 routes failures to error/ and can re-deliver).
   *
   * Scale: the whole per-batch plan is narrow (decode/classify/flatten are
-  * row-local; geo enrichment broadcasts) — no shuffle on the hot path, so
-  * throughput scales linearly with executors.
+  * row-local; geo enrichment broadcasts) — no shuffle on the hot path. A
+  * batch's partition count follows its bytes by Spark's own file-split rule
+  * ([[StreamingIngest.sizedToBytes]]): a small batch runs one task per sink
+  * and writes one file per leaf, a large one spreads over the cores the
+  * split rule gives it.
   */
 object StreamingIngest {
 
@@ -113,6 +120,8 @@ object StreamingIngest {
     * batchIds per backfill slice).
     *
     * Order within a batch:
+    *   0. the batch is coalesced to the partitions its bytes justify
+    *      ([[sizedToBytes]]), so a small batch is one task per sink;
     *   1. the stage write runs alone. It fills the persisted `classified`
     *      cache, and two `Observation`s ride it: records per class, counted
     *      before the SOH filter, and alert rows. No job only checks
@@ -132,8 +141,12 @@ object StreamingIngest {
     * is what StageCompactor folds away. */
   def writeBatch(batch: DataFrame, geoDim: DataFrame, paths: Paths,
       batchId: Long, notifier: Option[AlertNotifier] = None): BatchCounts = {
-    // Classify once; persist so the sinks don't re-decode the batch.
-    val classified = classify(batch).persist()
+    // Classify once, over as many partitions as the batch's bytes justify;
+    // persist so the sinks don't re-decode the batch. The geo dimension is
+    // sized the same way: each broadcast of it is a job, and a local
+    // relation would run that job as one task per core.
+    val classified = classify(sizedToBytes(batch)).persist()
+    val geo = sizedToBytes(geoDim)
     try {
       // Processing-time partition for the raw zones (hello.py:52-53) — the
       // wall clock of this batch, NOT event time (ST2). Carried as columns
@@ -157,7 +170,7 @@ object StreamingIngest {
       val alertRows = Observation()
       val counters = classes.map(c => count_if(col("cls") === c).as(c))
       stageFromClassified(
-          classified.observe(perClass, counters.head, counters.tail: _*), geoDim)
+          classified.observe(perClass, counters.head, counters.tail: _*), geo)
         .observe(alertRows, count_if(alertCondition).as("alerts"))
         .withColumn("batch_id", lit(batchId.toString))
         .write.mode("overwrite")
@@ -187,7 +200,7 @@ object StreamingIngest {
           .partitionBy("year", "month", "day")
           .json(s"${paths.error}/batch=$batchId")
       val alertSink: () => Unit = () => {
-        val rows = alerts(stageFromClassified(classified, geoDim))
+        val rows = alerts(stageFromClassified(classified, geo))
         rows.withColumn("batch_id", lit(batchId.toString))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
@@ -211,6 +224,25 @@ object StreamingIngest {
         Seq("alerts" -> alertSink).filter(_ => counts.alerts > 0))
       counts
     } finally classified.unpersist()
+  }
+
+  /** `df` coalesced to the partition count its bytes justify: the count
+    * Spark's split rule (`FilePartition.maxSplitBytes`) gives one file of
+    * the frame's optimized-plan size. A file stream batch of one file per
+    * POST is otherwise spread as if each file weighed
+    * `spark.sql.files.openCostInBytes`, and every task of every sink job
+    * pays a fixed cost (the job's Hadoop conf is deserialized per task) and
+    * writes its own file per leaf. A coalesce never adds partitions; a
+    * frame of unknown size (stats at `defaultSizeInBytes`: Kafka,
+    * RDD-backed frames) is left as it is. */
+  private[streaming] def sizedToBytes(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val bytes = ds.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (bytes >= ds.sparkSession.sessionState.conf.defaultSizeInBytes) df
+    else {
+      val split = FilePartition.maxSplitBytes(ds.sparkSession, bytes.toLong)
+      df.coalesce(((bytes + split - 1) / split).max(1).min(Int.MaxValue).toInt)
+    }
   }
 
   /** Run each named sink on a fresh thread and wait for all of them. Fresh
@@ -274,7 +306,9 @@ object StreamingIngest {
     *     same contract as any table format.
     * The listing walks year/month/day dirs on the driver — the same
     * directory walk Spark's own InMemoryFileIndex performs for a
-    * partitioned read, plus ONE snapshot read for the whole table.
+    * partitioned read, plus ONE snapshot read for the whole table — and the
+    * table's file index is built from that walk, so nothing is listed
+    * twice and building the frame runs no Spark job.
     */
   def stageTable(spark: SparkSession, paths: Paths): DataFrame =
     stageTableAt(spark, paths, asOfVersion = None)
@@ -290,13 +324,37 @@ object StreamingIngest {
     * is no longer detectable — shorten travel distance, not trust. */
   def stageTableAt(spark: SparkSession, paths: Paths,
       asOfVersion: Option[Long]): DataFrame = {
-    val files = stageFilesAt(spark, paths, asOfVersion)
-    if (files.isEmpty)
+    val leaves = stageLeavesAt(spark, paths, asOfVersion).filter(_._2.nonEmpty)
+    if (leaves.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stageReadSchema)
-    else
-      spark.read.schema(stageReadSchema)
-        .option("basePath", paths.stage).parquet(files: _*)
+    else {
+      // The index is built over the leaf listings already in hand, so it
+      // lists nothing itself (a plain read of the files would list them all
+      // again, past 32 paths in a parallel listing job).
+      val options = Map("basePath" -> paths.stage)
+      val index = new InMemoryFileIndex(spark, leaves.map(_._1), options,
+        Some(stageReadSchema), new ListedLeaves(leaves))
+      val parts = index.partitionSchema
+      val data = StructType(stageReadSchema.filterNot(f => parts.fieldNames.contains(f.name)))
+      val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      classic.baseRelationToDataFrame(
+        HadoopFsRelation(index, parts, data, None, new ParquetFileFormat, options)(classic))
+    }
+  }
+
+  /** A file-status cache holding given leaf-directory listings: an
+    * `InMemoryFileIndex` over those leaves reads them from here instead of
+    * listing. Private to one index, never the session's shared cache, so a
+    * replay that rewrites a leaf cannot serve a later read a stale listing;
+    * `invalidateAll` (a refresh) drops them and the next listing is real. */
+  private final class ListedLeaves(leaves: Seq[(Path, Array[FileStatus])])
+      extends FileStatusCache {
+    private val byDir = new java.util.concurrent.ConcurrentHashMap[Path, Array[FileStatus]]()
+    leaves.foreach { case (dir, files) => byDir.put(dir, files) }
+    override def getLeafFiles(dir: Path): Option[Array[FileStatus]] = Option(byDir.get(dir))
+    override def putLeafFiles(dir: Path, files: Array[FileStatus]): Unit = byDir.put(dir, files)
+    override def invalidateAll(): Unit = byDir.clear()
   }
 
   /** The snapshot's parquet leaf files (the listing half of
@@ -305,10 +363,16 @@ object StreamingIngest {
     * apply the manifest version's visibility, and enforce the retention
     * check for travelling reads. */
   def stageFilesAt(spark: SparkSession, paths: Paths,
-      asOfVersion: Option[Long]): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(paths.stage)
+      asOfVersion: Option[Long]): Seq[String] =
+    stageLeavesAt(spark, paths, asOfVersion).flatMap(_._2.map(_.getPath.toString))
+
+  /** The snapshot's visible `batch_id=` leaf dirs, each with its parquet
+    * files (see [[stageFilesAt]]). */
+  private def stageLeavesAt(spark: SparkSession, paths: Paths,
+      asOfVersion: Option[Long]): Seq[(Path, Array[FileStatus])] = {
+    val root = new Path(paths.stage)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def children(p: org.apache.hadoop.fs.Path, prefix: String) =
+    def children(p: Path, prefix: String) =
       if (!fs.isDirectory(p)) Seq.empty
       else fs.listStatus(p)
         .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
@@ -326,7 +390,7 @@ object StreamingIngest {
     // loose day-level files under one basePath would make Spark's partition
     // inference see conflicting depths ({y,m,d} vs {y,m,d,batch_id}) and
     // reject the read, so anything else at the day level is not data.
-    val files = for {
+    for {
       y <- children(root, "year=")
       m <- children(y, "month=")
       d <- children(m, "day=")
@@ -345,9 +409,6 @@ object StreamingIngest {
       }
       leaf <- leaves
         if state.includes(leaf.getName)
-      f <- fs.listStatus(leaf).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).toSeq
-    } yield f.toString
-    files
+    } yield leaf -> fs.listStatus(leaf).filter(_.getPath.getName.endsWith(".parquet"))
   }
 }

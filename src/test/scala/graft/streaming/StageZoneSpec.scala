@@ -130,6 +130,55 @@ class StageZoneSpec extends AnyFunSuite {
     spark.sql("DROP TABLE stage_mf")
   }
 
+  test("stageTable over more than 32 leaves lists them once: building it runs no job, rows equal a plain read") {
+    val paths = StreamingIngest.Paths(
+      Files.createTempDirectory("graft-leaves").toString)
+    // 40 visible leaves over two days, two rows each
+    spark.range(80).select(StreamingIngest.stageReadSchema.fields.toSeq.map { f =>
+      (f.name match {
+        case "recordId" => concat(lit("r-"), col("id"))
+        case "deviceid" => col("id").cast("int")
+        case "year" => lit("2023")
+        case "month" => lit("03")
+        case "day" => when(col("id") % 2 === 0, "14").otherwise("15")
+        case "batch_id" => (col("id") % 40).cast("string")
+        case _ => lit(null).cast(f.dataType)
+      }).as(f.name)
+    }: _*).write.partitionBy("year", "month", "day", "batch_id").parquet(paths.stage)
+    // plus a landed but uncommitted compacted leaf, which the manifest hides
+    val dayDir = new Path(s"${paths.stage}/year=2023/month=03/day=14")
+    val fs = dayDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    FileUtil.copy(fs, new Path(dayDir, "batch_id=0"), fs,
+      new Path(dayDir, "batch_id=compacted-1"), false,
+      spark.sparkContext.hadoopConfiguration)
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graftx.ListenerBusFlush.flush(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val stage = try {
+      val built = StreamingIngest.stageTable(spark, paths)
+      org.apache.spark.sql.graftx.ListenerBusFlush.flush(spark)
+      built
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0, s"building stageTable ran ${jobs.get} jobs")
+
+    val files = StreamingIngest.stageFilesAt(spark, paths, None)
+    assert(files.map(f => new Path(f).getParent.toString).distinct.size == 40)
+    assert(!files.exists(_.contains("compacted")))
+    val plain = spark.read.schema(StreamingIngest.stageReadSchema)
+      .option("basePath", paths.stage).parquet(files: _*)
+    assert(stage.schema == plain.schema)
+    assert(stage.inputFiles.sorted.toSeq == plain.inputFiles.sorted.toSeq)
+    assert(stage.collect().map(_.toString).sorted.toSeq ==
+      plain.collect().map(_.toString).sorted.toSeq)
+    assert(stage.count() == 80)
+    assert(stage.filter(col("day") === "14").select("batch_id").distinct().count() == 20)
+  }
+
   test("schema drift against the declared stage contract is detected, LOG-only (S12)") {
     val root = Files.createTempDirectory("graft-drift").toString
     val paths = StreamingIngest.Paths(root)

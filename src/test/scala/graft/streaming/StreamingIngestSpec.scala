@@ -353,6 +353,108 @@ class StreamingIngestSpec extends AnyFunSuite {
       "each alert is published at least once")
   }
 
+  /** Data files (Spark's `part-` outputs) per directory under `root`. */
+  def dataFilesPerDir(root: String): Map[String, Int] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    walk(new java.io.File(root)).filter(_.getName.startsWith("part-"))
+      .groupBy(_.getParentFile.getPath.stripPrefix(root + "/"))
+      .map { case (dir, files) => dir -> files.size }
+  }
+
+  test("a small file-stream batch runs one task per job and writes one file per leaf") {
+    // One file per POST: 28 one-record files (a few KB) are one batch. By
+    // Spark's split rule each file weighs `openCostInBytes` (4 MB), which
+    // would spread the batch over 4 partitions; sized to its bytes it is
+    // one partition, so every job of the batch runs one task and every
+    // zone leaf holds one data file.
+    val base = Files.createTempDirectory("graft-small").toString
+    val drop = new java.io.File(base, "drop"); drop.mkdirs()
+    val paths = StreamingIngest.Paths(s"$base/lake")
+    val lines = (1 to 24).map(i =>
+      sohEnvelope(i, 1678759166L + i, bv = if (i % 8 == 0) 3.2 else 4.05)._2) ++ Seq(
+      sensorEnvelope("s", "$PIMD8,1,1,866,65098,37.7749,N,122.4194,W,*4F")._2,
+      sensorEnvelope("u", "$GPGGA,123519,4807.038,N")._2,
+      "!!! not base64 !!!", "also not base64")
+    lines.zipWithIndex.foreach { case (line, i) =>
+      Files.write(new java.io.File(drop, f"rec-$i%02d.txt").toPath, line.getBytes("UTF-8"))
+    }
+    // the geo dimension as a local relation of several rows, as a caller
+    // that collected it would hold it
+    val places = GeoDim.fromPlaces((0 until 8).map(i =>
+      (-122.4194 + i, 37.7749, "410", s"Street $i", "San Francisco", "California",
+        "San Francisco County", "94107", "USA", "America/Los_Angeles", -25200)
+    ).toDF("longitude", "latitude", "addressnumber", "street", "municipality",
+      "region", "subregion", "postalcode", "country", "timezone_name",
+      "timezone_offset"))
+    val localGeo = spark.createDataFrame(places.collect().toSeq.asJava, places.schema)
+    val batchJobs = scala.collection.mutable.Set.empty[Int]
+    val jobOfStage = scala.collection.mutable.Map.empty[Int, Int]
+    val tasks = scala.collection.mutable.Map.empty[Int, Int].withDefaultValue(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("streaming.sql.batchId") != null)) {
+          batchJobs += j.jobId
+          j.stageIds.foreach(jobOfStage(_) = j.jobId)
+        }
+      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        jobOfStage.get(t.stageId).foreach(j => tasks(j) += 1)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val env = spark.readStream.format("graft-envelope").load(drop.toString)
+        .select("recordId", "data")
+      val q = StreamingIngest.start(spark, env, localGeo, paths, Trigger.AvailableNow())
+      q.processAllAvailable(); q.stop()
+      assert(q.recentProgress.map(_.numInputRows).sum == 28)
+      org.apache.spark.sql.graftx.ListenerBusFlush.flush(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    // stage, raw soh/sensor/unknown, error and alerts
+    assert(batchJobs.size >= 6, batchJobs)
+    val perJob = batchJobs.toSeq.sorted.map(j => j -> tasks(j))
+    assert(perJob.forall(_._2 == 1), s"tasks per job: $perJob")
+    val leaves = dataFilesPerDir(paths.root)
+    Seq("stage/", "raw/soh/", "raw/sensor/", "raw/unknown/", "error/", "alerts/")
+      .foreach(zone => assert(leaves.keys.count(_.startsWith(zone)) == 1, s"$zone in $leaves"))
+    assert(leaves.values.forall(_ == 1), leaves)
+    assert(StreamingIngest.stageTable(spark, paths).count() == 24)
+  }
+
+  test("a batch keeps the partitions its bytes justify, capped at what it has; unknown sizes and empty batches are left alone") {
+    def parts(df: org.apache.spark.sql.DataFrame): Int =
+      StreamingIngest.sizedToBytes(df).rdd.getNumPartitions
+    // 40,000 bytes at a 4,000-byte split size is 10 splits
+    val file = new java.io.File(Files.createTempDirectory("graft-sized").toFile, "in.txt")
+    Files.write(file.toPath, ("x" * 39999 + "\n").getBytes("UTF-8"))
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "4000")
+    try {
+      val text = spark.read.text(file.toString)
+      assert(parts(text.repartition(16)) == 10)
+      assert(parts(text.repartition(6)) == 6)
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    // a few KB is one split under the default split rule
+    val small = (1 to 20).map(i => sohEnvelope(i, 1678759166L + i)).toDF("recordId", "data")
+    assert(parts(small.repartition(8)) == 1)
+
+    // an RDD-backed frame has no known size: left as it is
+    val rdd = spark.sparkContext.parallelize(Seq(sohEnvelope(1, 1678759166L)), 5)
+      .map { case (id, data) => org.apache.spark.sql.Row(id, data) }
+    val unknown = spark.createDataFrame(rdd, small.schema)
+    assert(StreamingIngest.sizedToBytes(unknown) eq unknown)
+    assert(parts(unknown) == 5)
+
+    // an empty batch writes no data file and counts nothing
+    val paths = StreamingIngest.Paths(Files.createTempDirectory("graft-empty").toString)
+    val counts = StreamingIngest.writeBatch(
+      Seq.empty[(String, String)].toDF("recordId", "data"), geo, paths, batchId = 0L)
+    assert(counts.alerts == 0 && counts.byClass.values.forall(_ == 0), counts)
+    assert(counts.byClass.size == 4)
+    assert(dataFilesPerDir(paths.root).isEmpty, dataFilesPerDir(paths.root))
+  }
+
   test("sink jobs carry their batch's id and the query's job group; a failing sink fails the batch after the others finish") {
     // Sink threads are made inside the batch, so they inherit its local
     // properties: every job submitted while a batch runs carries that
