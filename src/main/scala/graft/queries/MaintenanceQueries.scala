@@ -890,8 +890,8 @@ object MaintenanceQueries {
   * [[graft.sources.StageTimeTravelCatalog]] under a name derived from the
   * fixture directory. The query body itself stays read-only SQL. */
 private[queries] object TimeTravelFixture {
-  // v2: manifests stamp committedAtMs (q331's TIMESTAMP AS OF axis)
-  private val FixtureVersion = 2L
+  // v3: compacted through the stage zone's shared walk and file index
+  private val FixtureVersion = 3L
 
   def ensure(s: org.apache.spark.sql.SparkSession, d: String): String =
     ensureWithPaths(s, d)._1
@@ -946,8 +946,8 @@ private[queries] object TimeTravelFixture {
   * fixture (vacuums happen at build time, so a cached fixture must still
   * answer what each stage reclaimed). */
 private[queries] object VacuumFixture {
-  // v2: two-stage age-hold/age-cut vacuum (round-14)
-  private val FixtureVersion = 2L
+  // v3: compacted and vacuumed through the stage zone's shared walk
+  private val FixtureVersion = 3L
 
   def ensure(s: org.apache.spark.sql.SparkSession, d: String)
       : (String, graft.streaming.StageCompactor.VacuumReport,

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Small-file compaction for the stage zone.
   *
@@ -49,47 +50,44 @@ object StageCompactor {
     val dir = new Path(paths.stage, dayRel)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.isDirectory(dir), s"no such partition: $dir")
-    def parquetFilesIn(p: Path): Seq[Path] =
-      fs.listStatus(p).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).toSeq
-    // snapshot the VISIBLE leaves (manifest semantics, same as the reader;
-    // the zone holds exclusively batch_id=* leaf dirs — see stageTable)
-    val state = StageManifest.read(fs, stageRoot).day(dayRel)
-    val leaves = fs.listStatus(dir)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch_id="))
-      .map(_.getPath).filter(p => state.includes(p.getName)).toSeq
-    val before = leaves.flatMap(parquetFilesIn)
-    require(before.nonEmpty, s"nothing to compact under $dir")
+    // snapshot the VISIBLE leaves (the zone's one walk, same as the reader)
+    val leaves = StageManifest.visible(fs,
+      Seq(StageManifest.day(fs, stageRoot, dayRel)), StageManifest.read(fs, stageRoot))
+    require(leaves.nonEmpty, s"nothing to compact under $dir")
 
-    // Rewrite exactly the snapshot — concurrent appends stay untouched.
-    // (Reading explicit leaf files re-infers `batch_id` from their dirs;
-    // drop it so the compacted DATA files carry only data columns and the
-    // landed zone stays uniformly partition-encoded.)
+    // Rewrite exactly the snapshot — concurrent appends stay untouched. The
+    // index is the one the reader uses, over the leaves just listed, so
+    // nothing is listed again nor a footer read to infer the schema; the
+    // compacted DATA files carry only the declared data columns, and the
+    // landed zone stays uniformly partition-encoded.
     val tmp = new Path(dir, s".compact-${System.currentTimeMillis}")
-    val clusterKeys: Seq[org.apache.spark.sql.Column] =
+    val clusterKeys: Seq[Column] =
       if (zorder)
-        Seq(graft.functions.ZOrder.morton2(
-          org.apache.spark.sql.functions.col("deviceid"),
-          (org.apache.spark.sql.functions.col("date_time") / 60).cast("long")))
-      else Seq(org.apache.spark.sql.functions.col("deviceid"),
-        org.apache.spark.sql.functions.col("date_time"))
-    spark.read.parquet(before.map(_.toString): _*)
-      .drop("batch_id")
+        Seq(graft.functions.ZOrder.morton2(col("deviceid"),
+          (col("date_time") / 60).cast("long")))
+      else Seq(col("deviceid"), col("date_time"))
+    val dataCols = StreamingIngest.stageReadSchema.fieldNames
+      .filterNot(StageCatalog.partitionCols.contains).map(col).toSeq
+    StreamingIngest.stageFrame(spark, StreamingIngest.stageIndex(spark, paths, leaves))
+      .select(dataCols: _*)
       .repartition(filesPerPartition)
       .sortWithinPartitions(clusterKeys: _*)
       .write.mode("overwrite")
       .option("compression", paths.stageCompression)
       .parquet(tmp.toString)
-    val nCompacted = parquetFilesIn(tmp).length
+    def parquetFilesIn(p: Path): Int =
+      fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
+    val nCompacted = parquetFilesIn(tmp)
 
     // land the leaf — checked rename; still INVISIBLE (not live yet) —
     // then verify it holds everything the rewrite produced
     val target = new Path(dir, s"batch_id=compacted-${System.currentTimeMillis}")
     require(fs.rename(tmp, target), s"rename $tmp -> $target failed")
-    val published = parquetFilesIn(target).length
+    val published = parquetFilesIn(target)
     require(published == nCompacted && published > 0,
       s"compacted leaf $target incomplete: $published of $nCompacted files")
-    Rewrite(dayRel, leaves.map(_.getName).toSet, target.getName, before.length)
+    Rewrite(dayRel, leaves.map(_.dir.getName).toSet, target.getName,
+      leaves.map(_.files.length).sum)
   }
 
   /** Compact several year/month/day partitions as ONE atomic commit: all
@@ -119,21 +117,16 @@ object StageCompactor {
     // dirs from crashes before their rename
     rewrites.map { r =>
       val dir = new Path(paths.stage, r.dayRel)
-      val state = committed.day(r.dayRel)
       if (!lazyDeletes) {
-        state.retired
+        committed.day(r.dayRel).retired
           .map(n => new Path(dir, n)).filter(fs.exists)
           .foreach(p => require(fs.delete(p, true), s"delete retired $p failed"))
-        fs.listStatus(dir).map(_.getPath)
-          .filter(_.getName.startsWith(".compact-"))
+        StageManifest.day(fs, stageRoot, r.dayRel).orphans
           .foreach(p => require(fs.delete(p, true), s"delete orphan $p failed"))
       }
-      val after = fs.listStatus(dir)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch_id="))
-        .map(_.getPath).filter(p => state.includes(p.getName)).toSeq
-        .map(p => fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet")))
-        .sum
-      (r.filesBefore, after)
+      val after = StageManifest.visible(fs,
+        Seq(StageManifest.day(fs, stageRoot, r.dayRel)), committed)
+      (r.filesBefore, after.map(_.files.length).sum)
     }
   }
 
@@ -229,31 +222,18 @@ object StageCompactor {
     }
 
     // 3. delete leaves no retained snapshot can see, plus orphaned
-    //    .compact-* rewrite dirs from crashed compactions
-    def children(p: Path, prefix: String): Seq[Path] =
-      if (!fs.isDirectory(p)) Seq.empty
-      else fs.listStatus(p)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-        .map(_.getPath).toSeq
+    //    .compact-* rewrite dirs from crashed compactions; foreign dirs
+    //    are not ours to touch
     var nDeleted = 0
     var bytes = 0L
     for {
-      y <- children(stageRoot, "year=")
-      m <- children(y, "month=")
-      d <- children(m, "day=")
-      rel = s"${y.getName}/${m.getName}/${d.getName}"
-      leaf <- fs.listStatus(d).filter(_.isDirectory).map(_.getPath)
+      d <- StageManifest.days(fs, stageRoot)
+      leaf <- d.leaves.filterNot(l => snaps.exists(_.day(d.rel).includes(l.getName))) ++
+        d.orphans
     } {
-      val name = leaf.getName
-      val keep =
-        if (name.startsWith("batch_id="))
-          snaps.exists(_.day(rel).includes(name))
-        else !name.startsWith(".compact-") // foreign dirs are not ours to touch
-      if (!keep) {
-        bytes += fs.getContentSummary(leaf).getLength
-        require(fs.delete(leaf, true), s"delete vacuumed leaf $leaf failed")
-        nDeleted += 1
-      }
+      bytes += fs.getContentSummary(leaf).getLength
+      require(fs.delete(leaf, true), s"delete vacuumed leaf $leaf failed")
+      nDeleted += 1
     }
     VacuumReport(floor, retained.length, pruned.length, nDeleted, bytes)
   }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /** Versioned TABLE-LEVEL commit manifest — the table-format kernel that
   * makes compaction ATOMIC on a plain filesystem, across any number of
@@ -41,9 +41,13 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * fork history — the maintenance contract is one compactor at a time
   * (ingest never writes the manifest; only compaction does).
   *
-  * Consequence: the stage zone must be read through `stageTable` (the
-  * engine's catalog entry point), exactly as any table format requires
-  * readers to honor its manifest rather than `ls`.
+  * Consequence: every reader and maintainer of the stage zone takes its
+  * leaves from ONE walk ([[days]], [[visible]], [[leavesAt]]), which
+  * applies this rule and, for travelling reads, the retention check.
+  * `stageTable`, SQL `graft_stage` and the compactor scan through
+  * `StreamingIngest.stageIndex` over that walk's listing, and
+  * `StageCatalog` registers exactly its leaves — as any table format
+  * requires readers to honor its manifest rather than `ls`.
   */
 object StageManifest {
   val DirName = "_manifest"
@@ -68,6 +72,83 @@ object StageManifest {
   /** One day's commit payload: originals leaving the visible set and the
     * compacted leaf entering it. */
   final case class DayChange(replaced: Set[String], compacted: String)
+
+  /** One `year=/month=/day=` directory of the zone: its manifest key
+    * (`year=Y/month=M/day=D`) and the directories under it, listed once.
+    * Leaves are exclusively `batch_id=*` DIRS: mixing leaf-dir files with
+    * loose day-level files under one basePath would make Spark's partition
+    * inference see conflicting depths ({y,m,d} vs {y,m,d,batch_id}) and
+    * reject the read, so anything else at the day level is not data. */
+  final case class Day(rel: String, dirs: Seq[Path]) {
+    /** Its `batch_id=` leaves, visible or not. */
+    def leaves: Seq[Path] = dirs.filter(_.getName.startsWith("batch_id="))
+    /** `.compact-*` rewrite dirs left by a compaction that crashed before
+      * renaming them into a leaf. */
+    def orphans: Seq[Path] = dirs.filter(_.getName.startsWith(".compact-"))
+  }
+
+  /** A visible leaf: its day's manifest key, its dir and its parquet files. */
+  final case class Leaf(dayRel: String, dir: Path, files: Array[FileStatus])
+
+  /** The zone's one directory walk: every `year=/month=/day=` dir under
+    * `stageRoot`, each with its subdirectories. */
+  def days(fs: FileSystem, stageRoot: Path): Seq[Day] = {
+    def children(p: Path, prefix: String) =
+      if (!fs.isDirectory(p)) Seq.empty
+      else fs.listStatus(p)
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
+        .map(_.getPath).toSeq
+    for {
+      y <- children(stageRoot, "year=")
+      m <- children(y, "month=")
+      d <- children(m, "day=")
+    } yield day(fs, stageRoot, s"${y.getName}/${m.getName}/${d.getName}")
+  }
+
+  /** One day of the walk, by manifest key; no dirs if it does not exist. */
+  def day(fs: FileSystem, stageRoot: Path, rel: String): Day = {
+    val dir = new Path(stageRoot, rel)
+    Day(rel,
+      if (!fs.isDirectory(dir)) Seq.empty
+      else fs.listStatus(dir).filter(_.isDirectory).map(_.getPath).toSeq)
+  }
+
+  /** The leaves of `days` that `snapshot` shows, each with its parquet
+    * files; leaves holding none are left out. */
+  def visible(fs: FileSystem, days: Seq[Day], snapshot: Snapshot): Seq[Leaf] =
+    for {
+      d <- days
+      leaf <- d.leaves if snapshot.day(d.rel).includes(leaf.getName)
+      files = fs.listStatus(leaf).filter(_.getPath.getName.endsWith(".parquet"))
+      if files.nonEmpty
+    } yield Leaf(d.rel, leaf, files)
+
+  /** The visible leaves of the whole zone as of snapshot `asOfVersion`
+    * (None = current): what every stage read scans. A travelling read
+    * (an older version) is checked against retention: a leaf that snapshot
+    * shows but the current one has retired must still exist, or the travel
+    * would silently lose rows. */
+  def leavesAt(fs: FileSystem, stageRoot: Path,
+      asOfVersion: Option[Long]): Seq[Leaf] = {
+    val current = read(fs, stageRoot)
+    val snapshot = asOfVersion match {
+      case Some(v) if v != current.version =>
+        readVersion(fs, stageRoot, v).getOrElse(
+          throw new IllegalArgumentException(
+            s"no stage snapshot version $v (current is ${current.version})"))
+      case _ => current
+    }
+    val all = days(fs, stageRoot)
+    if (snapshot.version != current.version) all.foreach { d =>
+      val present = d.leaves.map(_.getName).toSet
+      val lost = current.day(d.rel).retired
+        .filter(snapshot.day(d.rel).includes).diff(present)
+      require(lost.isEmpty,
+        s"time travel to version ${snapshot.version} is beyond retention: " +
+          s"day ${d.rel} leaves already deleted: ${lost.mkString(", ")}")
+    }
+    visible(fs, all, snapshot)
+  }
 
   private def versionFile(root: Path, v: Long) =
     new Path(new Path(root, DirName), f"v$v%020d.json")

@@ -278,9 +278,6 @@ object StreamingIngest {
     Option(failure.get).foreach(e => throw e)
   }
 
-  /** Register the landed stage zone as a queryable table — the Glue-catalog
-    * role (stack.py:320-345): partition discovery is Spark's built-in
-    * directory inference; `basePath` keeps the partition columns. */
   /** Full landed-zone schema: recordId + the declared stage30 contract +
     * string partition tokens (zero-padded JQ strftime, stack.py:233) +
     * batch_id (string: micro-batch ids land as `42`, compacted leaves as
@@ -304,11 +301,11 @@ object StreamingIngest {
     *     Reading the directory tree directly (plain spark.read.parquet)
     *     bypasses the manifest and can see a mid-compaction double image —
     *     same contract as any table format.
-    * The listing walks year/month/day dirs on the driver — the same
-    * directory walk Spark's own InMemoryFileIndex performs for a
-    * partitioned read, plus ONE snapshot read for the whole table — and the
-    * table's file index is built from that walk, so nothing is listed
-    * twice and building the frame runs no Spark job.
+    * The leaves come from the zone's one walk
+    * ([[StageManifest.leavesAt]]: year/month/day dirs on the driver plus ONE
+    * snapshot read for the whole table) and the table's file index is built
+    * from that walk ([[stageIndex]]), so nothing is listed twice and
+    * building the frame runs no Spark job.
     */
   def stageTable(spark: SparkSession, paths: Paths): DataFrame =
     stageTableAt(spark, paths, asOfVersion = None)
@@ -323,24 +320,40 @@ object StreamingIngest {
     * later commit has pruned that record AND the leaf is deleted, the gap
     * is no longer detectable — shorten travel distance, not trust. */
   def stageTableAt(spark: SparkSession, paths: Paths,
-      asOfVersion: Option[Long]): DataFrame = {
-    val leaves = stageLeavesAt(spark, paths, asOfVersion).filter(_._2.nonEmpty)
-    if (leaves.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stageReadSchema)
-    else {
-      // The index is built over the leaf listings already in hand, so it
-      // lists nothing itself (a plain read of the files would list them all
-      // again, past 32 paths in a parallel listing job).
-      val options = Map("basePath" -> paths.stage)
-      val index = new InMemoryFileIndex(spark, leaves.map(_._1), options,
-        Some(stageReadSchema), new ListedLeaves(leaves))
-      val parts = index.partitionSchema
-      val data = StructType(stageReadSchema.filterNot(f => parts.fieldNames.contains(f.name)))
-      val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      classic.baseRelationToDataFrame(
-        HadoopFsRelation(index, parts, data, None, new ParquetFileFormat, options)(classic))
-    }
+      asOfVersion: Option[Long]): DataFrame =
+    stageFrame(spark, stageIndexAt(spark, paths, asOfVersion))
+
+  /** The file index over snapshot `asOfVersion`'s visible leaves — what
+    * both [[stageTableAt]] and SQL `graft_stage` ([[graft.sources
+    * .StageTimeTravelCatalog]]) scan. */
+  private[graft] def stageIndexAt(spark: SparkSession, paths: Paths,
+      asOfVersion: Option[Long]): InMemoryFileIndex = {
+    val root = new Path(paths.stage)
+    stageIndex(spark, paths, StageManifest.leavesAt(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root, asOfVersion))
+  }
+
+  /** The one index builder for stage reads: an `InMemoryFileIndex` over
+    * leaves the walk has already listed, with the declared schema. It lists
+    * nothing itself (a plain read of the files would list them all again,
+    * past 32 paths in a parallel listing job). Over no leaves it infers no
+    * partition columns and reads as an empty frame with [[stageReadSchema]];
+    * it then gets no `basePath`, which must name an existing dir. */
+  private[streaming] def stageIndex(spark: SparkSession, paths: Paths,
+      leaves: Seq[StageManifest.Leaf]): InMemoryFileIndex =
+    new InMemoryFileIndex(spark, leaves.map(_.dir),
+      if (leaves.isEmpty) Map.empty else Map("basePath" -> paths.stage),
+      Some(stageReadSchema), new ListedLeaves(leaves))
+
+  /** A V1 frame over a stage index: data columns, then the partition
+    * columns the index inferred. */
+  private[streaming] def stageFrame(spark: SparkSession,
+      index: InMemoryFileIndex): DataFrame = {
+    val parts = index.partitionSchema
+    val data = StructType(stageReadSchema.filterNot(f => parts.fieldNames.contains(f.name)))
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    classic.baseRelationToDataFrame(HadoopFsRelation(index, parts, data, None,
+      new ParquetFileFormat, Map.empty)(classic))
   }
 
   /** A file-status cache holding given leaf-directory listings: an
@@ -348,67 +361,12 @@ object StreamingIngest {
     * listing. Private to one index, never the session's shared cache, so a
     * replay that rewrites a leaf cannot serve a later read a stale listing;
     * `invalidateAll` (a refresh) drops them and the next listing is real. */
-  private final class ListedLeaves(leaves: Seq[(Path, Array[FileStatus])])
+  private final class ListedLeaves(leaves: Seq[StageManifest.Leaf])
       extends FileStatusCache {
     private val byDir = new java.util.concurrent.ConcurrentHashMap[Path, Array[FileStatus]]()
-    leaves.foreach { case (dir, files) => byDir.put(dir, files) }
+    leaves.foreach(l => byDir.put(l.dir, l.files))
     override def getLeafFiles(dir: Path): Option[Array[FileStatus]] = Option(byDir.get(dir))
     override def putLeafFiles(dir: Path, files: Array[FileStatus]): Unit = byDir.put(dir, files)
     override def invalidateAll(): Unit = byDir.clear()
-  }
-
-  /** The snapshot's parquet leaf files (the listing half of
-    * [[stageTableAt]], shared with the SQL `VERSION AS OF` path through
-    * [[graft.sources.StageTimeTravelCatalog]]): walk year/month/day dirs,
-    * apply the manifest version's visibility, and enforce the retention
-    * check for travelling reads. */
-  def stageFilesAt(spark: SparkSession, paths: Paths,
-      asOfVersion: Option[Long]): Seq[String] =
-    stageLeavesAt(spark, paths, asOfVersion).flatMap(_._2.map(_.getPath.toString))
-
-  /** The snapshot's visible `batch_id=` leaf dirs, each with its parquet
-    * files (see [[stageFilesAt]]). */
-  private def stageLeavesAt(spark: SparkSession, paths: Paths,
-      asOfVersion: Option[Long]): Seq[(Path, Array[FileStatus])] = {
-    val root = new Path(paths.stage)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def children(p: Path, prefix: String) =
-      if (!fs.isDirectory(p)) Seq.empty
-      else fs.listStatus(p)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-        .map(_.getPath).toSeq
-    val current = StageManifest.read(fs, root)
-    val snapshot = asOfVersion match {
-      case Some(v) if v != current.version =>
-        StageManifest.readVersion(fs, root, v).getOrElse(
-          throw new IllegalArgumentException(
-            s"no stage snapshot version $v (current is ${current.version})"))
-      case _ => current
-    }
-    val travelling = snapshot.version != current.version
-    // Leaves are exclusively `batch_id=*` DIRS: mixing leaf-dir files with
-    // loose day-level files under one basePath would make Spark's partition
-    // inference see conflicting depths ({y,m,d} vs {y,m,d,batch_id}) and
-    // reject the read, so anything else at the day level is not data.
-    for {
-      y <- children(root, "year=")
-      m <- children(y, "month=")
-      d <- children(m, "day=")
-      rel = s"${y.getName}/${m.getName}/${d.getName}"
-      state = snapshot.day(rel)
-      leaves = children(d, "batch_id=")
-      _ = if (travelling) {
-        // retention check: a leaf this snapshot reads but the current one
-        // has retired must still exist, or the travel silently loses rows
-        val present = leaves.map(_.getName).toSet
-        val lost = current.day(rel).retired
-          .filter(state.includes).diff(present)
-        require(lost.isEmpty,
-          s"time travel to version ${snapshot.version} is beyond retention: " +
-            s"day $rel leaves already deleted: ${lost.mkString(", ")}")
-      }
-      leaf <- leaves
-        if state.includes(leaf.getName)
-    } yield leaf -> fs.listStatus(leaf).filter(_.getPath.getName.endsWith(".parquet"))
   }
 }

@@ -3,11 +3,13 @@ package graft.sources
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 import graft.ingest.GeoDim
-import graft.streaming.{StageCompactor, StreamingIngest}
+import graft.streaming.{StageCompactor, StreamingIngest, SyntheticStage}
 
 /** SQL-level time travel over the manifest-versioned stage zone
   * (round-10 verdict #5): `graft_stage.<name> VERSION AS OF v` must reach
@@ -140,5 +142,54 @@ class TimeTravelSqlSpec extends AnyFunSuite {
     val gone = intercept[Exception](devices(
       "SELECT deviceid FROM graft_stage.trv VERSION AS OF 0"))
     assert(gone.getMessage.contains("beyond retention"), gone.getMessage)
+  }
+
+  test("graft_stage over more than 32 visible files plans and reads with no listing job, as stageTableAt does") {
+    val paths = StreamingIngest.Paths(
+      Files.createTempDirectory("graft-sqltravel-wide").toString)
+    // 60 leaves over three days, two rows each; compacting day 16 commits
+    // v1, which shows 41 leaves, while v0 still shows all 60
+    SyntheticStage.write(spark, paths, 120,
+      day = (col("id") % 3 + 14).cast("string"),
+      batchId = (col("id") % 60).cast("string"))
+    StageCompactor.compactPartition(spark, paths, "2023", "03", "16",
+      lazyDeletes = true)
+    StageTimeTravelCatalog.register("trv_wide", paths)
+
+    val planJobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listingJobs = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var planning = false
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        if (planning) planJobs.incrementAndGet()
+        if (Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+            .exists(_.startsWith("Listing leaf files"))) listingJobs.incrementAndGet()
+      }
+    }
+    def flush(): Unit = org.apache.spark.sql.graftx.ListenerBusFlush.flush(spark)
+    Seq("" -> None, " VERSION AS OF 0" -> Some(0L), " VERSION AS OF 1" -> Some(1L))
+      .foreach { case (travel, version) =>
+        flush()
+        spark.sparkContext.addSparkListener(listener)
+        val (df, rows) = try {
+          planning = true
+          val df = spark.sql(s"SELECT * FROM graft_stage.trv_wide$travel")
+          df.queryExecution.executedPlan
+          flush()
+          planning = false
+          val rows = df.collect()
+          flush()
+          (df, rows)
+        } finally spark.sparkContext.removeSparkListener(listener)
+        assert(planJobs.get == 0, s"planning$travel ran ${planJobs.get} jobs")
+        assert(listingJobs.get == 0, s"reading$travel ran ${listingJobs.get} listing jobs")
+
+        val ref = StreamingIngest.stageTableAt(spark, paths, version)
+        assert(df.inputFiles.length > 32)
+        assert(df.schema == ref.schema)
+        assert(df.inputFiles.sorted.toSeq == ref.inputFiles.sorted.toSeq)
+        assert(rows.map(_.toString).sorted.toSeq ==
+          ref.collect().map(_.toString).sorted.toSeq)
+      }
   }
 }

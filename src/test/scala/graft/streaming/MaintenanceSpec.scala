@@ -2,11 +2,15 @@ package graft.streaming
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{StringType, StructField}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestSession
+import graft.{Schemas, SparkTestSession}
 import graft.ingest.GeoDim
 
 /** Session windows (streaming form of q39) and stage-zone compaction. */
@@ -71,6 +75,47 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(after.select("deviceid").as[Int].collect().sorted.toSeq == before)
     // clustered: single file, rows sorted by deviceid
     assert(after.select("deviceid").as[Int].collect().toSeq == before)
+  }
+
+  test("compacting a day of more than 32 leaf files reads it through the stage index: no listing or footer-inference job") {
+    val paths = StreamingIngest.Paths(Files.createTempDirectory("graft-compact-wide").toString)
+    // 40 leaves of one day, two rows each: at least 40 leaf files
+    SyntheticStage.write(spark, paths, 80, day = lit("14"),
+      batchId = (col("id") % 40).cast("string"),
+      fill = Map("date_time" -> col("id") * 7 % 13, "battery_voltage" -> col("id") / 10))
+    def rows = StreamingIngest.stageTable(spark, paths).drop("batch_id")
+      .collect().map(_.toString).sorted.toSeq
+    val before = rows
+
+    // a metadata job (parallel listing, parquet footer inference) runs over
+    // a driver-side parallelize, unlike the scan and write jobs
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.add(j); () }
+    }
+    org.apache.spark.sql.graftx.ListenerBusFlush.flush(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val (nBefore, nAfter) = try {
+      val counts = StageCompactor.compactPartition(spark, paths, "2023", "03", "14")
+      org.apache.spark.sql.graftx.ListenerBusFlush.flush(spark)
+      counts
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(nBefore >= 40 && nAfter == 1, s"$nBefore -> $nAfter")
+    val metadata = jobs.asScala.toSeq.filter(_.stageInfos.exists(
+      _.rddInfos.exists(_.name == "ParallelCollectionRDD")))
+    assert(metadata.size == 0, s"listing/inference jobs of ${jobs.size} compaction jobs: " +
+      metadata.map(_.stageInfos.map(_.name).mkString(",")).mkString("; "))
+
+    val leaf = new Path(paths.stage, "year=2023/month=03/day=14")
+    val fs = leaf.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val compacted = fs.listStatus(leaf).map(_.getPath)
+      .filter(_.getName.startsWith("batch_id=compacted-")).toSeq
+    assert(compacted.size == 1, compacted)
+    val footer = spark.read.parquet(compacted.head.toString).schema
+    assert(footer.map(f => f.name -> f.dataType) ==
+      (StructField("recordId", StringType) +: Schemas.stage30.fields.toSeq)
+        .map(f => f.name -> f.dataType))
+    assert(rows == before)
   }
 
   test("snapshot versions: commits stack, half-written temps are invisible, version claims are exclusive") {

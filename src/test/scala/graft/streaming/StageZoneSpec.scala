@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -134,17 +135,9 @@ class StageZoneSpec extends AnyFunSuite {
     val paths = StreamingIngest.Paths(
       Files.createTempDirectory("graft-leaves").toString)
     // 40 visible leaves over two days, two rows each
-    spark.range(80).select(StreamingIngest.stageReadSchema.fields.toSeq.map { f =>
-      (f.name match {
-        case "recordId" => concat(lit("r-"), col("id"))
-        case "deviceid" => col("id").cast("int")
-        case "year" => lit("2023")
-        case "month" => lit("03")
-        case "day" => when(col("id") % 2 === 0, "14").otherwise("15")
-        case "batch_id" => (col("id") % 40).cast("string")
-        case _ => lit(null).cast(f.dataType)
-      }).as(f.name)
-    }: _*).write.partitionBy("year", "month", "day", "batch_id").parquet(paths.stage)
+    SyntheticStage.write(spark, paths, 80,
+      day = when(col("id") % 2 === 0, "14").otherwise("15"),
+      batchId = (col("id") % 40).cast("string"))
     // plus a landed but uncommitted compacted leaf, which the manifest hides
     val dayDir = new Path(s"${paths.stage}/year=2023/month=03/day=14")
     val fs = dayDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -166,7 +159,15 @@ class StageZoneSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(jobs.get == 0, s"building stageTable ran ${jobs.get} jobs")
 
-    val files = StreamingIngest.stageFilesAt(spark, paths, None)
+    // the reference listing, walked here with plain Hadoop calls: every
+    // parquet file of every leaf except the uncommitted compacted one
+    val files = for {
+      day <- Seq("14", "15")
+      leaf <- fs.listStatus(new Path(s"${paths.stage}/year=2023/month=03/day=$day")).toSeq
+      if leaf.isDirectory && leaf.getPath.getName != "batch_id=compacted-1"
+      file <- fs.listStatus(leaf.getPath).toSeq
+      if file.getPath.getName.endsWith(".parquet")
+    } yield file.getPath.toString
     assert(files.map(f => new Path(f).getParent.toString).distinct.size == 40)
     assert(!files.exists(_.contains("compacted")))
     val plain = spark.read.schema(StreamingIngest.stageReadSchema)
@@ -177,6 +178,26 @@ class StageZoneSpec extends AnyFunSuite {
       plain.collect().map(_.toString).sorted.toSeq)
     assert(stage.count() == 80)
     assert(stage.filter(col("day") === "14").select("batch_id").distinct().count() == 20)
+  }
+
+  test("lint: the stage zone is walked in StageManifest only and never read with read.parquet") {
+    // the zone's layout and visibility rule live in one walk
+    // (StageManifest.days/leavesAt); every reader scans through
+    // StreamingIngest.stageIndex over that walk's listing
+    val prefixFilter = """"(batch_id|year)="|startsWith\("(batch_id|year)=""".r
+    val stageRead = """\bread\s*(\.\s*\w+\([^()]*\)\s*)*\.\s*parquet\(""".r
+    val touchesStage = """paths\.stage\b|StageManifest|stageTable""".r
+    val offenders = Files.walk(java.nio.file.Paths.get("src/main")).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.getFileName.toString != "StageManifest.scala")
+      .flatMap { p =>
+        val src = Files.readString(p)
+        prefixFilter.findFirstIn(src).map(m => s"$p: $m") ++
+          (if (touchesStage.findFirstIn(src).isEmpty) None
+           else stageRead.findFirstIn(src).map(m => s"$p: $m"))
+      }.toSeq
+    assert(offenders.isEmpty,
+      "stage leaves come from StageManifest's walk and are read through " +
+        s"StreamingIngest.stageIndex, never listed or read again: $offenders")
   }
 
   test("schema drift against the declared stage contract is detected, LOG-only (S12)") {
